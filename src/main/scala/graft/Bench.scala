@@ -11,7 +11,7 @@ import graft.sources.{Fixtures, Pages}
  * Per-round benchmark. Emits ONE JSON line:
  *  - `queries`: wall seconds per SparkEntry query on SPARK_GRAFT_SF_DIR;
  *  - `pipeline`: the north-rule job (scan pages -> url-hash point ->
- *    broadcast R-tree PIP -> cell/tile assign -> rollup) on deterministic
+ *    broadcast PIP index -> cell/tile assign -> rollup) on deterministic
  *    synthesized pages, run at TWO parallelism levels (local[4] vs
  *    local[16], each in a CPU-confined child JVM) on the identical input
  *    — the sandbox evidence protocol for the N->4N executor

@@ -51,8 +51,8 @@ object SparkEntry {
     s"""(SELECT *, ${Pages.rowSql(G)} AS grow, ${Pages.colSql(G)} AS gcol FROM $pagesSql p)"""
 
   // =====================================================================
-  // Flagship: the full north-rule pipeline — cell encode -> broadcast
-  // R-tree PIP -> tile assignment -> per-(polygon, tile) rollup.
+  // Flagship: the full north-rule pipeline — cell encode -> plan-shipped
+  // PIP index -> tile assignment -> per-(polygon, tile) rollup.
   // =====================================================================
   def entry(spark: SparkSession): DataFrame = {
     val p = SpatialJoin.assign(pages(spark, "/root/testdata/sf0.001"), col("lon"), col("lat"), Fixtures.Polys)
@@ -76,7 +76,7 @@ object SparkEntry {
         .select(col("doc_id"), col("lon"), col("lat"), col("cell"), col("tile"))
     }),
 
-    // Broadcast R-tree point-in-polygon assignment, last-wins.
+    // Plan-shipped PIP index point-in-polygon assignment, last-wins.
     "q02_pip_assign" -> ((s, dir) => {
       SpatialJoin.assign(pages(s, dir), col("lon"), col("lat"), Fixtures.Polys)
         .select(col("doc_id"), col("poly_id").cast("int").as("poly_id"))

@@ -3,8 +3,8 @@ package graft.core
 /**
  * Minimal planar geometry for the vector side of the engine: polygons
  * with holes, point-in-polygon, covering-cell enumeration, rasterization
- * (pixel-center fill + all-touched boundary traversal) and an STR-packed
- * R-tree for the broadcast PIP index.
+ * (pixel-center fill + all-touched boundary traversal) and the polygon
+ * layer probed through the flat [[PipIndex]].
  *
  * Semantics mirror the reference's use of `rasterio.features.rasterize`
  * (reference raster.py:2435-2455): polygons select pixels whose CENTER is
@@ -75,37 +75,37 @@ final case class Polyline(id: Int, pts: IndexedSeq[(Double, Double)]) {
 }
 
 /**
- * Immutable broadcastable polygon layer with a lazily-built STR-packed
- * R-tree — the "broadcast R-tree per partition" of the north star: the
- * set ships with the serialized plan, and the tree is built once per
- * executor JVM on first use (@transient lazy).
+ * Immutable polygon layer for point-in-polygon probes. The flat
+ * [[PipIndex]] is built once, on the driver, and the set serializes AS
+ * that index (`writeReplace`): a task deserializes primitive arrays and
+ * rebuilds nothing. Every probe below, and the `PipWinner` /
+ * `PipContains` expressions and `PipAssignExec` that call them, run on
+ * that one kernel.
  */
-final case class PolygonSet(polys: IndexedSeq[Polygon]) extends Serializable {
+final class PolygonSet private (source: IndexedSeq[Polygon],
+                                private[graft] val index: PipIndex) extends Serializable {
 
-  @transient private lazy val tree: RTree = RTree.build(
-    polys.map(p => (p.bbox, p)))
+  /** The polygons in input order (rebuilt from the index after shipping). */
+  @transient lazy val polys: IndexedSeq[Polygon] = if (source != null) source else index.polygons
 
   /** Ids of polygons containing (x, y), ascending. */
-  def containingIds(x: Double, y: Double): Array[Int] =
-    tree.query(x, y).filter(_.contains(x, y)).map(_.id).sorted
+  def containingIds(x: Double, y: Double): Array[Int] = index.containingIds(x, y)
 
-  /** True if any polygon contains the point (mask / semi-join predicate). */
-  def containsAny(x: Double, y: Double): Boolean = tree.winner(x, y) != -1
+  /** True if the point has a winner (mask / semi-join predicate). */
+  def containsAny(x: Double, y: Double): Boolean = index.winner(x, y) != -1
 
   /**
    * Last-wins winner: the MAX polygon id containing the point, or -1.
-   * Allocation-free tree walk — this runs once per ROW inside
-   * WholeStageCodegen on the 100TB path, so no per-call garbage.
+   * Allocation-free — this runs once per ROW inside WholeStageCodegen.
    */
-  def winner(x: Double, y: Double): Int = tree.winner(x, y)
+  def winner(x: Double, y: Double): Int = index.winner(x, y)
 
-  // id -> position map: polygon ids need NOT be 0..n-1 positions — a user
-  // layer with non-contiguous ids must refine against the right polygon
-  @transient private lazy val byId: Map[Int, Polygon] =
-    polys.map(p => p.id -> p).toMap
+  /** Exact refine for a specific candidate id (ids need not be positions). */
+  def contains(id: Int, x: Double, y: Double): Boolean = index.contains(id, x, y)
 
-  /** Exact refine for a specific candidate id. */
-  def contains(id: Int, x: Double, y: Double): Boolean = byId(id).contains(x, y)
+  override def toString: String = s"PolygonSet(${index.size} polygons)"
+
+  private def writeReplace(): AnyRef = new PolygonSet.Shipped(index)
 
   /**
    * (cellId, polyId) covering pairs at a resolution — the equi-join
@@ -124,64 +124,11 @@ final case class PolygonSet(polys: IndexedSeq[Polygon]) extends Serializable {
     }
 }
 
-/** Simple STR-packed static R-tree over (bbox, value) pairs. */
-final class RTree private (nodes: Array[RTree.Node]) extends Serializable {
-  def query(x: Double, y: Double): Array[Polygon] = {
-    val out = Array.newBuilder[Polygon]
-    def visit(n: RTree.Node): Unit = {
-      if (x >= n.x0 && x <= n.x1 && y >= n.y0 && y <= n.y1) n match {
-        case l: RTree.Leaf => out += l.value
-        case b: RTree.Branch => b.children.foreach(visit)
-      }
-    }
-    nodes.foreach(visit)
-    out.result()
-  }
+object PolygonSet {
+  def apply(polys: IndexedSeq[Polygon]): PolygonSet = new PolygonSet(polys, PipIndex.build(polys))
 
-  /** Allocation-free: max id of a containing polygon, or -1. */
-  def winner(x: Double, y: Double): Int = {
-    var best = -1
-    def visit(n: RTree.Node): Unit = {
-      if (x >= n.x0 && x <= n.x1 && y >= n.y0 && y <= n.y1) n match {
-        case l: RTree.Leaf =>
-          if (l.value.id > best && l.value.contains(x, y)) best = l.value.id
-        case b: RTree.Branch =>
-          var i = 0
-          while (i < b.children.length) { visit(b.children(i)); i += 1 }
-      }
-    }
-    var i = 0
-    while (i < nodes.length) { visit(nodes(i)); i += 1 }
-    best
-  }
-}
-
-object RTree {
-  sealed abstract class Node extends Serializable {
-    def x0: Double; def y0: Double; def x1: Double; def y1: Double
-  }
-  final case class Leaf(x0: Double, y0: Double, x1: Double, y1: Double, value: Polygon) extends Node
-  final case class Branch(x0: Double, y0: Double, x1: Double, y1: Double, children: Array[Node]) extends Node
-
-  private val Fanout = 8
-
-  def build(items: Seq[((Double, Double, Double, Double), Polygon)]): RTree = {
-    val leaves: Array[Node] = items.map { case ((x0, y0, x1, y1), v) => Leaf(x0, y0, x1, y1, v) }.toArray
-    var level: Array[Node] = strPack(leaves)
-    while (level.length > Fanout) level = strPack(level)
-    new RTree(level)
-  }
-
-  /** Sort-Tile-Recursive packing: sort by x-center, slice, sort slices by y-center, group. */
-  private def strPack(nodes: Array[Node]): Array[Node] = {
-    if (nodes.length <= Fanout) return nodes
-    val sortedX = nodes.sortBy(n => (n.x0 + n.x1) / 2)
-    val sliceCount = math.ceil(math.sqrt(nodes.length.toDouble / Fanout)).toInt.max(1)
-    val sliceSize = math.ceil(nodes.length.toDouble / sliceCount).toInt
-    sortedX.grouped(sliceSize).flatMap { slice =>
-      slice.sortBy(n => (n.y0 + n.y1) / 2).grouped(Fanout).map { grp =>
-        Branch(grp.map(_.x0).min, grp.map(_.y0).min, grp.map(_.x1).max, grp.map(_.y1).max, grp)
-      }
-    }.toArray
+  /** Serialized form: the index alone. */
+  private final class Shipped(index: PipIndex) extends Serializable {
+    private def readResolve(): AnyRef = new PolygonSet(null, index)
   }
 }

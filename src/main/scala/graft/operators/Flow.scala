@@ -173,6 +173,8 @@ object Flow {
                    maxRounds: Int = 10000,
                    localCells: Long = 2000000L,
                    scheme: String = "doubling"): DataFrame = {
+    require(scheme == "doubling" || scheme == "wave",
+      s"unknown flow accumulation scheme '$scheme' (expected doubling or wave)")
     val spark = px.sparkSession
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     def truncate(df: DataFrame): DataFrame =

@@ -11,14 +11,15 @@ import graft.core.PolygonSet
 import graft.functions._
 
 /**
- * `PipWinner(lon, lat)` — broadcast R-tree point-in-polygon as a native
+ * `PipWinner(lon, lat)` — plan-shipped point-in-polygon as a native
  * Catalyst expression: returns the LAST-WINS containing polygon id, or
  * -1 if none (reference rasterize overwrite semantics,
  * raster.py:2442-2448). The PolygonSet ships with the serialized plan
  * (small vector layers only — the scale path for big layers is the
- * cover-cells equi-join in [[SpatialJoin.pipJoin]]); its R-tree is built
- * once per executor (@transient lazy in PolygonSet). Codegen'd via a
- * plan reference object, so the probe side stays in WholeStageCodegen.
+ * cover-cells equi-join in [[SpatialJoin.pipJoin]]) as its flat
+ * [[graft.core.PipIndex]], built once on the driver; tasks deserialize
+ * primitive arrays and build nothing. Codegen'd via a plan reference
+ * object, so the probe side stays in WholeStageCodegen.
  */
 case class PipWinner(left: Expression, right: Expression, polys: PolygonSet)
     extends BinaryExpression {
@@ -59,8 +60,8 @@ case class PipContains(first: Expression, second: Expression, third: Expression,
  * Point-in-polygon joins — the heart of the graft (SURVEY.md §2.3).
  *
  * Two physical shapes, chosen by layer size:
- *  - [[assign]]: zero-shuffle scalar assignment through the broadcast
- *    R-tree expression (small layers; the `mask`/tile-assignment path);
+ *  - [[assign]]: zero-shuffle scalar assignment through the plan-shipped
+ *    PIP index expression (small layers; the `mask`/tile-assignment path);
  *  - [[pipJoin]]: cover-cells equi-join + exact refine — polygon bboxes
  *    explode to covering cells at `res`, probes join on their cell id,
  *    then exact PIP refines. Shuffle-free on the probe side when the
@@ -72,7 +73,7 @@ object SpatialJoin {
   private def c(e: Expression): Column = GraftBridge.column(e)
   private def e(col: Column): Expression = GraftBridge.expression(col)
 
-  /** Adds `poly_id` (-1 if outside all) via the broadcast R-tree expression. */
+  /** Adds `poly_id` (-1 if outside all) via the plan-shipped PIP index expression. */
   def assign(points: DataFrame, lon: Column, lat: Column, polys: PolygonSet,
              out: String = "poly_id"): DataFrame =
     points.withColumn(out, c(PipWinner(e(lon), e(lat), polys)))

@@ -122,7 +122,7 @@ final case class Stack(df: DataFrame, meta: GridMeta, layers: Seq[String]) {
   /**
    * mask(shapes): null out pixels OUTSIDE the polygon union (keep inside);
    * invert=true keeps outside (raster.py:1346-1484). Zero-shuffle: a
-   * broadcast R-tree PIP predicate over pixel centers — the semi/anti
+   * plan-shipped PIP index predicate over pixel centers — the semi/anti
    * join of SURVEY.md §2.2 expressed as a projection.
    */
   def mask(shapes: PolygonSet, invert: Boolean = false, cropToShapes: Boolean = false): Stack = {

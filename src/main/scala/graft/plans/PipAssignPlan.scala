@@ -13,8 +13,8 @@ import graft.core.PolygonSet
  * WHOLE-OPERATOR point-in-polygon assignment — the top rung of the
  * custom-operator ladder (expression -> optimizer Rule ->
  * LogicalPlan + Strategy + physical SparkPlan): one logical node whose
- * physical operator streams child rows once, probes the broadcast
- * R-tree per row (allocation-free winner walk) and appends the
+ * physical operator streams child rows once, probes the broadcast PIP
+ * index per row (allocation-free `PolygonSet.winner`) and appends the
  * last-wins polygon id. Semantics identical to the expression path
  * (`SpatialJoin.assign`, reference rasterize burn order
  * raster.py:2442-2448); equality is asserted in ExtensionsSpec.
@@ -58,9 +58,9 @@ object PipAssignStrategy extends SparkStrategy {
 
 /**
  * Physical PIP assign: zero shuffle (`outputPartitioning` delegates to
- * the child), polygon layer broadcast once per executor, per-row R-tree
- * walk. The UnsafeProjection rebuild per partition keeps rows unsafe
- * end-to-end.
+ * the child), polygon layer broadcast once per executor as its flat
+ * index, per-row winner probe. The UnsafeProjection rebuild per
+ * partition keeps rows unsafe end-to-end.
  */
 case class PipAssignExec(child: SparkPlan, lon: Expression, lat: Expression,
                          polys: PolygonSet, outAttr: AttributeReference)

@@ -37,8 +37,8 @@ object ScaleQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
-    // North-rule pipeline at table scale: cell encode -> broadcast R-tree
-    // PIP -> coarse-cell rollup. Zero shuffle before the final partial agg.
+    // North-rule pipeline at table scale: cell encode -> plan-shipped PIP
+    // index -> coarse-cell rollup. Zero shuffle before the final partial agg.
     "q26_lineitem_spatial" -> ((s, dir) => {
       val p = SpatialJoin.assign(points(s, dir), col("lon"), col("lat"), Fixtures.Polys)
         .withColumn("cell", cell_encode(col("lon"), col("lat"), Res))

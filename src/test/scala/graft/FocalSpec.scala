@@ -275,6 +275,14 @@ class FocalSpec extends AnyFunSuite with SparkSpec {
     assert(collect(0L, "wave") === got)
   }
 
+  test("flow accumulation rejects an unknown scheme instead of running a default") {
+    val g = GridMeta.northUp(0.0, 0.0, W.toDouble, H.toDouble, width = W, height = H)
+    val e = intercept[IllegalArgumentException] {
+      graft.operators.Flow.accumulation(px, "b1", g, scheme = "dubling")
+    }
+    assert(e.getMessage.contains("dubling"))
+  }
+
   test("focal plans are separable windows: WindowExec, no join, no cartesian") {
     for (df <- Seq(Focal.stats3x3(px, "b1"),
                    Focal.horn(px, "b1", GridMeta.TestGrid),

@@ -71,6 +71,39 @@ class GeometrySpec extends AnyFunSuite {
       new java.io.ByteArrayInputStream(bos.toByteArray)).readObject().asInstanceOf[PolygonSet]
     assert(back.winner(5, 5) === 0)
     assert(back.winner(50, 50) === -1)
+
+    // a 3000-polygon layer with holes ships as its flat index: no Polygon
+    // or tuple objects on the wire, the index read back is the one used
+    // (nothing rebuilt), and every probe answers as before the trip
+    val polys = PipLayers.globe(3000, 1)
+    val big = PolygonSet(polys)
+    val out = new java.io.ByteArrayOutputStream()
+    new java.io.ObjectOutputStream(out).writeObject(big)
+    val classes = scala.collection.mutable.Set.empty[String]
+    val resolved = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
+    val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(out.toByteArray)) {
+      enableResolveObject(true)
+      override def resolveClass(d: java.io.ObjectStreamClass): Class[_] = {
+        classes += d.getName; super.resolveClass(d)
+      }
+      override def resolveObject(o: AnyRef): AnyRef = { resolved += o; o }
+    }
+    val shipped = in.readObject().asInstanceOf[PolygonSet]
+    assert(!classes.exists(n => n == classOf[Polygon].getName || n.startsWith("scala.Tuple2")), classes)
+    assert(resolved.exists(_ eq shipped.index))
+    val r0 = new scala.util.Random(17)
+    (1 to 20000).foreach { _ =>
+      val x = r0.nextDouble() * 360.0 - 180.0
+      val y = r0.nextDouble() * 180.0 - 90.0
+      assert(shipped.winner(x, y) === big.winner(x, y))
+      assert(shipped.containingIds(x, y).toSeq === big.containingIds(x, y).toSeq)
+      val id = r0.nextInt(3000)
+      assert(shipped.contains(id, x, y) === big.contains(id, x, y))
+    }
+    assert(shipped.polys.map(p => (p.id, p.shell.toSeq, p.holes.map(_.toSeq).toSeq)) ===
+      polys.map(p => (p.id, p.shell.toSeq, p.holes.map(_.toSeq).toSeq)))
+    // measured 998,616 bytes (the Polygon-object form was 1,066,216)
+    assert(out.size <= 1040000, s"${out.size} bytes")
   }
 
   test("PolygonSet.contains(id) refines against the RIGHT polygon for non-contiguous ids") {
