@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-
 /**
  * EPSG registry: dispatch an EPSG code's PARAMETER SET (proj=
  * merc/utm/tmerc/lcc/aea/stere + ellipsoid + origin + optional datum
@@ -55,7 +53,7 @@ object Epsg {
     case LonLat => Warp.Identity
     case WebMercator => Warp.MercatorToLonLat
     case UtmZone(z, n) => Warp.UtmToLonLat(z, n)
-    case TM(p, h) => TmercToLonLat(p, h, s"EPSG:$code")
+    case TM(p, h) => Warp.TmercToLonLat(p, h, s"EPSG:$code")
     case LCC(p) => Warp.LccToLonLat(p, s"EPSG:$code")
     case AEA(p) => Warp.AlbersToLonLat(p, s"EPSG:$code")
     case PS(p) => Warp.PsToLonLat(p, s"EPSG:$code")
@@ -64,187 +62,9 @@ object Epsg {
   /** WGS84 lon/lat -> projected meters (forward / pooling direction). */
   def fromLonLat(code: Int): Warp.CrsTransform = toLonLat(code).inverse
 
-  /**
-   * Generic-TM CRS (possibly on a legacy datum), target->source:
-   * projected (easting, northing) meters -> WGS84 lon/lat degrees.
-   * Chain: inverse Krüger on the CRS ellipsoid -> geodetic datum hop
-   * (ECEF + Helmert + Bowring) when the datum isn't WGS84-equivalent.
-   * All three instantiations (Column/Double/SQL) share one generic
-   * chain over [[Utm.Ar]] — identical IEEE order by construction.
-   */
-  final case class TmercToLonLat(p: Tmerc.Params,
-                                 toWgs84: Option[Datum.Helmert],
-                                 epsg: String) extends Warp.CrsTransform {
-    private def chain[T](e: T, n: T)(implicit F: Utm.Ar[T]): (T, T) = {
-      val (lonD, latD) = Tmerc.invLonLat(e, n, p)
-      toWgs84 match {
-        case None => (lonD, latD)
-        case Some(h) => Datum.geodeticShift(lonD, latD, p.ell, h, Tmerc.WGS84)
-      }
-    }
-    private def chainCol(x: Column, y: Column, takeX: Boolean): Column = {
-      import org.apache.spark.sql.GraftBridge
-      GraftBridge.column(GeoChain(GraftBridge.expression(x),
-        GraftBridge.expression(y), p, toWgs84, forward = false, takeX))
-    }
-    override def sourceX(x: Column, y: Column): Column = chainCol(x, y, takeX = true)
-    override def sourceY(x: Column, y: Column): Column = chainCol(x, y, takeX = false)
-    override def inverse: Warp.CrsTransform = LonLatToTmerc(p, toWgs84, epsg)
-    override def toSourcePt(x: Double, y: Double): (Double, Double) =
-      chain(x, y)(Utm.DblAr)
-    // NOT heavy: the [[GeoChain]] node is opaque to janino (the math is
-    // one JVM static call), so fusing into downstream stages is safe.
-
-    /**
-     * Staged SQL twin for the DuckDB oracle (SQL has no opaque scalar
-     * kernel, so the oracle materializes the chain at the four function
-     * boundaries as nested SELECTs instead): wraps
-     * subquery `inner` (which must SELECT `tx`, `ty` plus the `pass`
-     * columns) in chained SELECTs with the SAME stage boundaries, so
-     * engine and oracle share IEEE op order by construction.
-     */
-    def stagedSql(inner: String, tx: String, ty: String, pass: Seq[String],
-                  outX: String, outY: String): String = {
-      implicit val F: Utm.Ar[String] = Utm.SqlAr
-      val pl = pass.mkString(", ")
-      val (lonD, latD) = Tmerc.invLonLat(tx, ty, p)
-      val s1 = s"SELECT $pl, $lonD AS lond, $latD AS latd FROM ($inner)"
-      toWgs84 match {
-        case None =>
-          s"SELECT $pl, lond AS $outX, latd AS $outY FROM ($s1)"
-        case Some(h) =>
-          val (gx, gy, gz) = Datum.toEcef("lond", "latd", p.ell)
-          val s2 = s"SELECT $pl, $gx AS gx, $gy AS gy, $gz AS gz FROM ($s1)"
-          val (hx, hy, hz) = Datum.shift(h, "gx", "gy", "gz")
-          val s3 = s"SELECT $pl, $hx AS hx, $hy AS hy, $hz AS hz FROM ($s2)"
-          val (lon, lat) = Datum.toGeodetic("hx", "hy", "hz", Tmerc.WGS84)
-          s"SELECT $pl, $lon AS $outX, $lat AS $outY FROM ($s3)"
-      }
-    }
-  }
-
-  /** Forward: WGS84 lon/lat degrees -> projected (easting, northing)
-    * meters (datum hop first, then the forward Krüger). */
-  final case class LonLatToTmerc(p: Tmerc.Params,
-                                 toWgs84: Option[Datum.Helmert],
-                                 epsg: String) extends Warp.CrsTransform {
-    private def chain[T](lon: T, lat: T)(implicit F: Utm.Ar[T]): (T, T) = {
-      val (lonD, latD) = toWgs84 match {
-        case None => (lon, lat)
-        case Some(h) =>
-          Datum.geodeticShift(lon, lat, Tmerc.WGS84, h.inverse, p.ell)
-      }
-      Tmerc.fwdEN(lonD, latD, p)
-    }
-    private def chainCol(x: Column, y: Column, takeX: Boolean): Column = {
-      import org.apache.spark.sql.GraftBridge
-      GraftBridge.column(GeoChain(GraftBridge.expression(x),
-        GraftBridge.expression(y), p, toWgs84, forward = true, takeX))
-    }
-    override def sourceX(x: Column, y: Column): Column = chainCol(x, y, takeX = true)
-    override def sourceY(x: Column, y: Column): Column = chainCol(x, y, takeX = false)
-    override def inverse: Warp.CrsTransform = TmercToLonLat(p, toWgs84, epsg)
-    override def toSourcePt(x: Double, y: Double): (Double, Double) =
-      chain(x, y)(Utm.DblAr)
-    /** Single-expression SQL twin — only valid without a datum shift
-      * (the shifted chain must go through [[stagedSql]]). */
-    def sxSql(x: String, y: String): String = {
-      require(toWgs84.isEmpty, "use stagedSql for datum-shifted TM")
-      chain(x, y)(Utm.SqlAr)._1
-    }
-    def sySql(x: String, y: String): String = {
-      require(toWgs84.isEmpty, "use stagedSql for datum-shifted TM")
-      chain(x, y)(Utm.SqlAr)._2
-    }
-    /** Staged SQL twin (datum-shifted forward), nested-SELECT form. */
-    def stagedSql(inner: String, lonC: String, latC: String, pass: Seq[String],
-                  outX: String, outY: String): String = {
-      implicit val F: Utm.Ar[String] = Utm.SqlAr
-      val pl = pass.mkString(", ")
-      toWgs84 match {
-        case None =>
-          s"SELECT $pl, ${sxSql(lonC, latC)} AS $outX, ${sySql(lonC, latC)} AS $outY FROM ($inner)"
-        case Some(h) =>
-          val (gx, gy, gz) = Datum.toEcef(lonC, latC, Tmerc.WGS84)
-          val s1 = s"SELECT $pl, $gx AS gx, $gy AS gy, $gz AS gz FROM ($inner)"
-          val (hx, hy, hz) = Datum.shift(h.inverse, "gx", "gy", "gz")
-          val s2 = s"SELECT $pl, $hx AS hx, $hy AS hy, $hz AS hz FROM ($s1)"
-          val (lonD, latD) = Datum.toGeodetic("hx", "hy", "hz", p.ell)
-          val s3 = s"SELECT $pl, $lonD AS lond, $latD AS latd FROM ($s2)"
-          val (e, n) = Tmerc.fwdEN("lond", "latd", p)
-          s"SELECT $pl, $e AS $outX, $n AS $outY FROM ($s3)"
-      }
-    }
-  }
+  /** The generic-TM transforms, beside the other projections in [[Warp]]. */
+  type TmercToLonLat = Warp.TmercToLonLat
+  val TmercToLonLat: Warp.TmercToLonLat.type = Warp.TmercToLonLat
+  type LonLatToTmerc = Warp.LonLatToTmerc
+  val LonLatToTmerc: Warp.LonLatToTmerc.type = Warp.LonLatToTmerc
 }
-
-/**
- * Opaque scalar kernel for the generic-TM (± datum shift) chain: ONE
- * Catalyst expression node whose eval/codegen calls the chain's
- * [[Utm.DblAr]] instantiation directly — Catalyst's own Add/Sin/Atan
- * codegen bottoms out in the same java.lang.Math JVM ops, so values
- * are bit-identical to an inline-Column formulation of the same
- * generic series.
- *
- * WHY opaque instead of staged projections: alias-substituting
- * optimizer walks re-inline projected intermediates — dynamic
- * partition pruning's `findExpressionAndTrackLineageDown` substitutes
- * the join keys down through EVERY Project (measured: the composed
- * EPSG:27700 chain re-expands to a 5.3 MB-text tree and the optimizer
- * spends minutes in GC), and no staging discipline survives it. A
- * 3-node tree makes every such walk O(1), keeps WholeStageCodegen
- * fused (janino sees one static call, not 64 KB of math), and ships
- * the parameters as a plan reference object (the [[graft.functions.VecDot]]
- * pattern).
- *
- * Oracle identity: the DuckDB twin replays the SAME generic chain as
- * STAGED nested SELECTs ([[Epsg.TmercToLonLat.stagedSql]]); a stage
- * boundary stores a double, which reloads exactly, so both engines
- * execute the identical IEEE op sequence by construction.
- */
-case class GeoChain(left: org.apache.spark.sql.catalyst.expressions.Expression,
-                    right: org.apache.spark.sql.catalyst.expressions.Expression,
-                    p: Tmerc.Params, toWgs84: Option[Datum.Helmert],
-                    forward: Boolean, takeX: Boolean)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.Expression
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.sql.types.{DataType, DoubleType}
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String =
-    (if (forward) "tm_fwd_chain" else "tm_inv_chain") + (if (takeX) "_x" else "_y")
-
-  def compute(a: Double, b: Double): Double = {
-    implicit val F: Utm.Ar[Double] = Utm.DblAr
-    val r =
-      if (forward) {
-        val (lon, lat) = toWgs84 match {
-          case None => (a, b)
-          case Some(h) =>
-            Datum.geodeticShift(a, b, Tmerc.WGS84, h.inverse, p.ell)
-        }
-        Tmerc.fwdEN(lon, lat, p)
-      } else {
-        val (lonD, latD) = Tmerc.invLonLat(a, b, p)
-        toWgs84 match {
-          case None => (lonD, latD)
-          case Some(h) => Datum.geodeticShift(lonD, latD, p.ell, h, Tmerc.WGS84)
-        }
-      }
-    if (takeX) r._1 else r._2
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[Double], b.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("geoChain", this, classOf[GeoChain].getName)
-    defineCodeGen(ctx, ev, (x, y) => s"$ref.compute($x, $y)")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-

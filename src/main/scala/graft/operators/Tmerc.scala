@@ -6,20 +6,21 @@ package graft.operators
  * grids the reference reaches through pyproj `to_crs`
  * (reference raster.py:1711-1866; tests/test_tocrs.py:22-37 accepts any
  * EPSG code): EPSG:27700 British National Grid (Airy 1830), EPSG:2193
- * NZTM2000 (GRS80), the ETRS89/GDA/JGD zone systems, etc. [[Utm]] is
- * the WGS84 zone specialization of this kernel; it stays separate so
- * the green q68/q74 plans and oracles are untouched.
+ * NZTM2000 (GRS80), the ETRS89/GDA/JGD zone systems, etc. UTM zones
+ * are parameter sets of this kernel ([[Utm.params]]).
  *
- * Math: the same public Krüger series as [[Utm]] (Karney 2011; Snyder
- * PP 1395) with the ellipsoid's third flattening n driving the
- * alpha/beta/delta coefficients, plus the non-zero-latitude natural
- * origin handled by the meridian-arc offset m0 = k0*A*xi(lat0) — a
+ * Math: the public Krüger series of order n^3 (Karney 2011, "Transverse
+ * Mercator with an accuracy of a few nanometers"; Snyder PP 1395) —
+ * sub-centimeter within a UTM zone — with the ellipsoid's third
+ * flattening n driving the alpha/beta/delta coefficients, plus the
+ * non-zero-latitude natural origin handled by the meridian-arc offset
+ * m0 = k0*A*xi(lat0) — a
  * driver-side Double constant interpolated identically into every
  * instance, so northing = fn + k0*A*xi - m0.
  *
  * ORACLE DISCIPLINE: written once over [[Utm.Ar]] and instantiated as
- * Columns (engine), Doubles (grid derivation) and SQL text (DuckDB
- * twin) — identical IEEE op order by construction.
+ * Doubles (the engine's [[CrsPoint]] kernel and grid derivation) and
+ * SQL text (DuckDB twin) — identical IEEE op order by construction.
  */
 object Tmerc {
   import Utm.Ar

@@ -4,25 +4,22 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions
 
 /**
- * Transverse Mercator / UTM on the WGS84 ellipsoid — the projected-CRS
- * family the reference reaches through pyproj for `to_crs` (reference
- * raster.py:1711-1866; tests/test_tocrs.py:22-37 warps to arbitrary
- * EPSG codes, of which UTM zones are the most common real-world
- * targets). No proj database exists offline, so the math is the public
- * textbook Krüger series (order n^3 — sub-centimeter within a zone,
- * forward/inverse round-trip < 1e-7 deg, spec-pinned;
- * see Karney 2011, "Transverse Mercator with an accuracy of a few
- * nanometers", and the standard UTM series in Snyder's "Map
- * Projections — A Working Manual").
+ * The CRS kernels' arithmetic typeclass [[Utm.Ar]] plus the UTM zone
+ * system (EPSG:326xx / 327xx — the most common real-world `to_crs`
+ * targets the reference reaches through pyproj, raster.py:1711-1866;
+ * tests/test_tocrs.py:22-37). A UTM zone is a parameter set of the
+ * generic transverse-Mercator kernel ([[Tmerc]], the public Krüger
+ * series on WGS84): [[Utm.params]].
  *
- * ORACLE DISCIPLINE: the whole transform is written ONCE over a tiny
- * arithmetic typeclass [[Utm.Ar]] and instantiated three ways —
- * Catalyst [[Column]]s (the engine), [[Double]]s (driver-side grid
- * derivation), and SQL TEXT (the DuckDB twin). The Column tree and the
- * SQL string therefore have IDENTICAL operation order by construction
- * (the q52 shared-weight-text trick, generalized), and every composite
- * function is expressed in primitives measured bit-identical across
- * engines (+ - * /, EXP, LN, ATAN, SIN, COS, SQRT):
+ * ORACLE DISCIPLINE: every closed-form transform is written ONCE over
+ * [[Utm.Ar]] and instantiated as [[Double]]s (the engine kernel
+ * [[CrsPoint]] and driver-side grid derivation), SQL TEXT (the DuckDB
+ * twin), or Catalyst [[Column]]s (the light focal/geometry chains). The
+ * Double kernel and the SQL string therefore have IDENTICAL operation
+ * order by construction (the q52 shared-weight-text trick,
+ * generalized), and every composite function is expressed in
+ * primitives measured bit-identical across engines (+ - * /, EXP, LN,
+ * ATAN, SIN, COS, SQRT):
  *   sinh u  = (e^u - e^-u) * 0.5
  *   cosh u  = (e^u + e^-u) * 0.5
  *   atanh z = 0.5 * ln((1+z)/(1-z))
@@ -35,7 +32,14 @@ object Utm {
   /** Minimal field-of-operations abstraction (see class doc). `gt` is
     * the one conditional (if a > b then t else f): comparisons are
     * exact in IEEE, all three engines branch lazily, and composing it
-    * yields atan2/wrap logic with identical text (PolarStereo). */
+    * yields atan2/wrap logic with identical text (PolarStereo).
+    *
+    * NaN: [[DblAr]] treats NaN as NOT greater (Java `>` is false), so a
+    * NaN operand takes `ifFalse`; [[ColAr]] (Spark `GreaterThan`) and
+    * [[SqlAr]] (DuckDB) order NaN above every number, so `a = NaN`
+    * takes `ifTrue`. On NaN input the engine kernel and the SQL twin
+    * can therefore take different branches (PolarStereo's atan2 and
+    * longitude wrap); CrsRegistrySpec pins what the engine returns. */
   trait Ar[T] {
     def lit(d: Double): T
     def add(a: T, b: T): T; def sub(a: T, b: T): T
@@ -79,28 +83,6 @@ object Utm {
     def gt(a: Double, b: Double, t: Double, f: Double): Double = if (a > b) t else f
   }
 
-  /** Catalyst-Expression instance — for SQL function registration
-    * (`GraftExtensions`), where the builder must return a fully
-    * RESOLVED expression tree (round-tripping a composite Column
-    * through GraftBridge leaves unresolved function nodes). */
-  object ExprAr extends Ar[org.apache.spark.sql.catalyst.expressions.Expression] {
-    import org.apache.spark.sql.catalyst.expressions._
-    type E = Expression
-    def lit(d: Double): E = Literal(d)
-    def add(a: E, b: E): E = Add(a, b)
-    def sub(a: E, b: E): E = Subtract(a, b)
-    def mul(a: E, b: E): E = Multiply(a, b)
-    def div(a: E, b: E): E = Divide(a, b)
-    def neg(a: E): E = UnaryMinus(a)
-    def sin(a: E): E = Sin(a)
-    def cos(a: E): E = Cos(a)
-    def atan(a: E): E = Atan(a)
-    def exp(a: E): E = Exp(a)
-    def ln(a: E): E = Log(a)
-    def sqrt(a: E): E = Sqrt(a)
-    def gt(a: E, b: E, t: E, f: E): E = If(GreaterThan(a, b), t, f)
-  }
-
   object SqlAr extends Ar[String] {
     def lit(d: Double): String = graft.sources.OracleLit.d(d)
     def add(a: String, b: String): String = s"($a + $b)"
@@ -118,84 +100,14 @@ object Utm {
       s"(CASE WHEN $a > $b THEN $t ELSE $f END)"
   }
 
-  // -- WGS84 + Krüger coefficients (plain doubles, computed once) -------
-  private val MajorA = 6378137.0
-  private val Flat = 1.0 / 298.257223563
-  /** third flattening n = f / (2 - f) */
-  private val N = Flat / (2.0 - Flat)
-  /** rectifying radius A = a/(1+n) (1 + n^2/4 + n^4/64) */
-  private val RectA = MajorA / (1.0 + N) * (1.0 + N * N / 4.0 + N * N * N * N / 64.0)
-  val K0 = 0.9996
-  private val K0A = K0 * RectA
-  private val Alpha = Array(
-    N / 2.0 - 2.0 / 3.0 * N * N + 5.0 / 16.0 * N * N * N,
-    13.0 / 48.0 * N * N - 3.0 / 5.0 * N * N * N,
-    61.0 / 240.0 * N * N * N)
-  private val Beta = Array(
-    N / 2.0 - 2.0 / 3.0 * N * N + 37.0 / 96.0 * N * N * N,
-    1.0 / 48.0 * N * N + 1.0 / 15.0 * N * N * N,
-    17.0 / 480.0 * N * N * N)
-  private val Delta = Array(
-    2.0 * N - 2.0 / 3.0 * N * N - 2.0 * N * N * N,
-    7.0 / 3.0 * N * N - 8.0 / 5.0 * N * N * N,
-    56.0 / 15.0 * N * N * N)
-  private val C1 = 2.0 * math.sqrt(N) / (1.0 + N)
-  val FalseEasting = 500000.0
-  def falseNorthing(north: Boolean): Double = if (north) 0.0 else 10000000.0
   /** Central meridian of a UTM zone, degrees. */
   def lon0Deg(zone: Int): Double = { require(zone >= 1 && zone <= 60); zone * 6.0 - 183.0 }
-  private val DegPerRad = 180.0 / math.Pi
-  private val RadPerDeg = math.Pi / 180.0
 
-  // -- composite functions over proven-bit-identical primitives ---------
-  private def sinhF[T](u: T)(implicit F: Ar[T]): T =
-    F.mul(F.sub(F.exp(u), F.exp(F.neg(u))), F.lit(0.5))
-  private def coshF[T](u: T)(implicit F: Ar[T]): T =
-    F.mul(F.add(F.exp(u), F.exp(F.neg(u))), F.lit(0.5))
-  private def atanhF[T](z: T)(implicit F: Ar[T]): T =
-    F.mul(F.lit(0.5), F.ln(F.div(F.add(F.lit(1.0), z), F.sub(F.lit(1.0), z))))
-  private def asinF[T](z: T)(implicit F: Ar[T]): T =
-    F.atan(F.div(z, F.sqrt(F.mul(F.sub(F.lit(1.0), z), F.add(F.lit(1.0), z)))))
-
-  /**
-   * Inverse transverse Mercator: UTM (easting, northing) meters ->
-   * (lon, lat) degrees. The per-pixel direction of a nearest/interp
-   * warp ONTO a UTM grid (target meters back-project to source lon/lat).
-   */
-  def invLonLat[T](e: T, nth: T, zone: Int, north: Boolean)(implicit F: Ar[T]): (T, T) = {
-    def two(j: Int, v: T): T = F.mul(F.lit(2.0 * j), v)
-    def series(coef: Array[Double], f: (T, T) => T, a: T, b: T): T =
-      (1 to 3).map(j => F.mul(F.lit(coef(j - 1)), f(two(j, a), two(j, b)))).reduce(F.add)
-    val xi = F.div(F.sub(nth, F.lit(falseNorthing(north))), F.lit(K0A))
-    val eta = F.div(F.sub(e, F.lit(FalseEasting)), F.lit(K0A))
-    val xiP = F.sub(xi, series(Beta, (x, y) => F.mul(F.sin(x), coshF(y)), xi, eta))
-    val etaP = F.sub(eta, series(Beta, (x, y) => F.mul(F.cos(x), sinhF(y)), xi, eta))
-    val chi = asinF(F.div(F.sin(xiP), coshF(etaP)))
-    val phi = F.add(chi,
-      (1 to 3).map(j => F.mul(F.lit(Delta(j - 1)), F.sin(two(j, chi)))).reduce(F.add))
-    val lam = F.atan(F.div(sinhF(etaP), F.cos(xiP)))
-    (F.add(F.lit(lon0Deg(zone)), F.mul(lam, F.lit(DegPerRad))),
-      F.mul(phi, F.lit(DegPerRad)))
-  }
-
-  /**
-   * Forward transverse Mercator: (lon, lat) degrees -> UTM (easting,
-   * northing) meters. Used by the pooling kernels' forward projection
-   * and by [[Warp.defaultTarget]]'s bounds derivation.
-   */
-  def fwdEN[T](lon: T, lat: T, zone: Int, north: Boolean)(implicit F: Ar[T]): (T, T) = {
-    def two(j: Int, v: T): T = F.mul(F.lit(2.0 * j), v)
-    def series(f: (T, T) => T, a: T, b: T): T =
-      (1 to 3).map(j => F.mul(F.lit(Alpha(j - 1)), f(two(j, a), two(j, b)))).reduce(F.add)
-    val lamP = F.mul(F.sub(lon, F.lit(lon0Deg(zone))), F.lit(RadPerDeg))
-    val phi = F.mul(lat, F.lit(RadPerDeg))
-    val s = F.sin(phi)
-    val t = sinhF(F.sub(atanhF(s), F.mul(F.lit(C1), atanhF(F.mul(F.lit(C1), s)))))
-    val xiP = F.atan(F.div(t, F.cos(lamP)))
-    val etaP = atanhF(F.div(F.sin(lamP), F.sqrt(F.add(F.lit(1.0), F.mul(t, t)))))
-    val xi = F.add(xiP, series((x, y) => F.mul(F.sin(x), coshF(y)), xiP, etaP))
-    val eta = F.add(etaP, series((x, y) => F.mul(F.cos(x), sinhF(y)), xiP, etaP))
-    (F.add(F.lit(FalseEasting), F.mul(F.lit(K0A), eta)),
-      F.add(F.lit(falseNorthing(north)), F.mul(F.lit(K0A), xi)))
-  }
+  /** A UTM zone as generic-TM parameters: WGS84, natural origin on the
+    * equator at the zone's central meridian, k0 = 0.9996, 500 km false
+    * easting, 10,000 km false northing in the south. The natural origin
+    * on the equator makes m0 exactly +0.0. */
+  def params(zone: Int, north: Boolean): Tmerc.Params =
+    Tmerc.Params(Tmerc.WGS84, lat0Deg = 0.0, lon0Deg = lon0Deg(zone),
+      k0 = 0.9996, fe = 500000.0, fn = if (north) 0.0 else 10000000.0)
 }

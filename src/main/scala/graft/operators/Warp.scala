@@ -38,21 +38,34 @@ object Warp {
     def inverse: CrsTransform
     /** Scalar twin of sourceX/sourceY (driver-side grid derivation). */
     def toSourcePt(x: Double, y: Double): (Double, Double)
-    /** True for transforms whose Column tree is large enough to blow
-      * janino's 64 KB method limit when INLINED into a fused hash-agg
-      * stage (the Krüger series): the pooling kernels then materialize
-      * the forward projection once instead of fusing it into the
-      * aggregation (silent interpreted fallback otherwise). */
-    def heavy: Boolean = false
   }
 
-  /** [[CrsPoint]] wrapper: the opaque-kernel Column for a heavy
-    * transform's series (see the CrsPoint doc for the bit-identity
-    * argument). */
-  private def crsCol(t: CrsTransform, x: Column, y: Column, takeX: Boolean): Column =
-    org.apache.spark.sql.GraftBridge.column(CrsPoint(
-      org.apache.spark.sql.GraftBridge.expression(x),
-      org.apache.spark.sql.GraftBridge.expression(y), t, takeX))
+  /**
+   * A closed-form projection (UTM, generic TM ± datum shift, LCC,
+   * Albers, polar stereographic, each direction): the series is written
+   * ONCE, as [[project]] over the [[Utm.Ar]] arithmetic typeclass, and
+   * every view derives from it —
+   *  - the engine Columns are one opaque [[CrsPoint]] node each, which
+   *    evaluates the [[Utm.DblAr]] instance;
+   *  - the driver-side [[toSourcePt]] is that same instance;
+   *  - the DuckDB twin text ([[sxSql]]/[[sySql]]) is the [[Utm.SqlAr]]
+   *    instance, so engine and oracle share IEEE op order by
+   *    construction.
+   */
+  sealed trait Projection extends CrsTransform {
+    def project[T](x: T, y: T)(implicit F: Utm.Ar[T]): (T, T)
+    final override def sourceX(x: Column, y: Column): Column = crsCol(x, y, takeX = true)
+    final override def sourceY(x: Column, y: Column): Column = crsCol(x, y, takeX = false)
+    final override def toSourcePt(x: Double, y: Double): (Double, Double) =
+      project(x, y)(Utm.DblAr)
+    def sxSql(x: String, y: String): String = sqlTwin(x, y)._1
+    def sySql(x: String, y: String): String = sqlTwin(x, y)._2
+    protected def sqlTwin(x: String, y: String): (String, String) = project(x, y)(Utm.SqlAr)
+    private def crsCol(x: Column, y: Column, takeX: Boolean): Column = {
+      import org.apache.spark.sql.GraftBridge
+      GraftBridge.column(CrsPoint(GraftBridge.expression(x), GraftBridge.expression(y), this, takeX))
+    }
+  }
 
   /** Affine pseudo-CRS: sx = a*x + b*y + c, sy = d*x + e*y + f. */
   final case class AffineCrs(a: Double, b: Double, c: Double,
@@ -159,41 +172,116 @@ object Warp {
   /**
    * UTM zone CRS (EPSG:326xx / 327xx), target->source direction: target
    * world coordinates in UTM METERS back-project to source lon/lat
-   * DEGREES through the inverse Krüger series ([[Utm.invLonLat]]) —
-   * covers the reference's most common real projected `to_crs` targets
-   * (raster.py:1711-1866 via pyproj; tests/test_tocrs.py:22-37). The
-   * Column tree and the SQL twins are instantiations of the SAME
-   * generic series ([[Utm.Ar]]), so their IEEE order is identical by
-   * construction.
+   * DEGREES through the inverse Krüger series of the zone's TM
+   * parameters ([[Utm.params]]) — the reference's most common real
+   * projected `to_crs` targets (raster.py:1711-1866 via pyproj;
+   * tests/test_tocrs.py:22-37).
    */
-  final case class UtmToLonLat(zone: Int, north: Boolean) extends CrsTransform {
-    override def sourceX(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = true)
-    override def sourceY(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = false)
+  final case class UtmToLonLat(zone: Int, north: Boolean) extends Projection {
+    private val p = Utm.params(zone, north)
+    def project[T](x: T, y: T)(implicit F: Utm.Ar[T]): (T, T) = Tmerc.invLonLat(x, y, p)
     override def inverse: CrsTransform = LonLatToUtm(zone, north)
-    override def toSourcePt(x: Double, y: Double): (Double, Double) =
-      Utm.invLonLat(x, y, zone, north)(Utm.DblAr)
-    def sxSql(x: String, y: String): String = Utm.invLonLat(x, y, zone, north)(Utm.SqlAr)._1
-    def sySql(x: String, y: String): String = Utm.invLonLat(x, y, zone, north)(Utm.SqlAr)._2
-    override def heavy: Boolean = true
     /** EPSG name: 326xx north, 327xx south. */
     def epsg: String = f"EPSG:${if (north) 32600 + zone else 32700 + zone}%d"
   }
 
   /** Forward UTM (lon/lat degrees -> zone meters) — srcToTarget for the
     * pooling kernels and the defaultTarget bounds projection. */
-  final case class LonLatToUtm(zone: Int, north: Boolean) extends CrsTransform {
-    override def sourceX(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = true)
-    override def sourceY(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = false)
+  final case class LonLatToUtm(zone: Int, north: Boolean) extends Projection {
+    private val p = Utm.params(zone, north)
+    def project[T](x: T, y: T)(implicit F: Utm.Ar[T]): (T, T) = Tmerc.fwdEN(x, y, p)
     override def inverse: CrsTransform = UtmToLonLat(zone, north)
-    override def toSourcePt(x: Double, y: Double): (Double, Double) =
-      Utm.fwdEN(x, y, zone, north)(Utm.DblAr)
-    def sxSql(x: String, y: String): String = Utm.fwdEN(x, y, zone, north)(Utm.SqlAr)._1
-    def sySql(x: String, y: String): String = Utm.fwdEN(x, y, zone, north)(Utm.SqlAr)._2
-    override def heavy: Boolean = true
+  }
+
+  /**
+   * Generic-TM CRS (possibly on a legacy datum — the EPSG registry's
+   * [[Epsg.TM]] rows), target->source: projected (easting, northing)
+   * meters -> WGS84 lon/lat degrees. Chain: inverse Krüger on the CRS
+   * ellipsoid -> geodetic datum hop (ECEF + Helmert + Bowring) when the
+   * datum isn't WGS84-equivalent.
+   */
+  final case class TmercToLonLat(p: Tmerc.Params, toWgs84: Option[Datum.Helmert],
+                                 epsg: String) extends Projection {
+    def project[T](x: T, y: T)(implicit F: Utm.Ar[T]): (T, T) = {
+      val (lonD, latD) = Tmerc.invLonLat(x, y, p)
+      toWgs84 match {
+        case None => (lonD, latD)
+        case Some(h) => Datum.geodeticShift(lonD, latD, p.ell, h, Tmerc.WGS84)
+      }
+    }
+    override def inverse: CrsTransform = LonLatToTmerc(p, toWgs84, epsg)
+    /** Single-expression SQL twin — only valid without a datum shift
+      * (the shifted chain must go through [[stagedSql]]). */
+    override protected def sqlTwin(x: String, y: String): (String, String) = {
+      require(toWgs84.isEmpty, "use stagedSql for datum-shifted TM")
+      super.sqlTwin(x, y)
+    }
+
+    /**
+     * Staged SQL twin for the DuckDB oracle: the composed datum-shifted
+     * text explodes combinatorially (5.3 MB vs 4 KB per stage), so the
+     * oracle materializes the chain at its four function boundaries as
+     * nested SELECTs. Wraps subquery `inner` (which must SELECT `tx`,
+     * `ty` plus the `pass` columns); a stage boundary stores a double,
+     * which reloads exactly, so engine and oracle share IEEE op order by
+     * construction.
+     */
+    def stagedSql(inner: String, tx: String, ty: String, pass: Seq[String],
+                  outX: String, outY: String): String = {
+      implicit val F: Utm.Ar[String] = Utm.SqlAr
+      val pl = pass.mkString(", ")
+      val (lonD, latD) = Tmerc.invLonLat(tx, ty, p)
+      val s1 = s"SELECT $pl, $lonD AS lond, $latD AS latd FROM ($inner)"
+      toWgs84 match {
+        case None =>
+          s"SELECT $pl, lond AS $outX, latd AS $outY FROM ($s1)"
+        case Some(h) =>
+          val (gx, gy, gz) = Datum.toEcef("lond", "latd", p.ell)
+          val s2 = s"SELECT $pl, $gx AS gx, $gy AS gy, $gz AS gz FROM ($s1)"
+          val (hx, hy, hz) = Datum.shift(h, "gx", "gy", "gz")
+          val s3 = s"SELECT $pl, $hx AS hx, $hy AS hy, $hz AS hz FROM ($s2)"
+          val (lon, lat) = Datum.toGeodetic("hx", "hy", "hz", Tmerc.WGS84)
+          s"SELECT $pl, $lon AS $outX, $lat AS $outY FROM ($s3)"
+      }
+    }
+  }
+
+  /** Forward generic TM: WGS84 lon/lat degrees -> projected (easting,
+    * northing) meters (datum hop first, then the forward Krüger). */
+  final case class LonLatToTmerc(p: Tmerc.Params, toWgs84: Option[Datum.Helmert],
+                                 epsg: String) extends Projection {
+    def project[T](x: T, y: T)(implicit F: Utm.Ar[T]): (T, T) = {
+      val (lonD, latD) = toWgs84 match {
+        case None => (x, y)
+        case Some(h) => Datum.geodeticShift(x, y, Tmerc.WGS84, h.inverse, p.ell)
+      }
+      Tmerc.fwdEN(lonD, latD, p)
+    }
+    override def inverse: CrsTransform = TmercToLonLat(p, toWgs84, epsg)
+    /** Single-expression SQL twin — only valid without a datum shift. */
+    override protected def sqlTwin(x: String, y: String): (String, String) = {
+      require(toWgs84.isEmpty, "use stagedSql for datum-shifted TM")
+      super.sqlTwin(x, y)
+    }
+    /** Staged SQL twin (datum-shifted forward), nested-SELECT form. */
+    def stagedSql(inner: String, lonC: String, latC: String, pass: Seq[String],
+                  outX: String, outY: String): String = {
+      implicit val F: Utm.Ar[String] = Utm.SqlAr
+      val pl = pass.mkString(", ")
+      toWgs84 match {
+        case None =>
+          s"SELECT $pl, ${sxSql(lonC, latC)} AS $outX, ${sySql(lonC, latC)} AS $outY FROM ($inner)"
+        case Some(h) =>
+          val (gx, gy, gz) = Datum.toEcef(lonC, latC, Tmerc.WGS84)
+          val s1 = s"SELECT $pl, $gx AS gx, $gy AS gy, $gz AS gz FROM ($inner)"
+          val (hx, hy, hz) = Datum.shift(h.inverse, "gx", "gy", "gz")
+          val s2 = s"SELECT $pl, $hx AS hx, $hy AS hy, $hz AS hz FROM ($s1)"
+          val (lonD, latD) = Datum.toGeodetic("hx", "hy", "hz", p.ell)
+          val s3 = s"SELECT $pl, $lonD AS lond, $latD AS latd FROM ($s2)"
+          val (e, n) = Tmerc.fwdEN("lond", "latd", p)
+          s"SELECT $pl, $e AS $outX, $n AS $outY FROM ($s3)"
+      }
+    }
   }
 
   /**
@@ -203,36 +291,18 @@ object Warp {
    * closed-form Snyder inverse ([[Lcc.invLonLat]]) — with UTM this
    * covers the two projected families behind nearly every national
    * grid the reference's `to_crs` reaches via pyproj
-   * (raster.py:1711-1866). Same [[Utm.Ar]] typeclass discipline: the
-   * Column tree and the SQL twins share one generic series, identical
-   * IEEE order by construction.
+   * (raster.py:1711-1866).
    */
-  final case class LccToLonLat(p: Lcc.Params, epsg: String) extends CrsTransform {
-    override def sourceX(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = true)
-    override def sourceY(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = false)
+  final case class LccToLonLat(p: Lcc.Params, epsg: String) extends Projection {
+    def project[T](x: T, y: T)(implicit F: Utm.Ar[T]): (T, T) = Lcc.invLonLat(x, y, p)
     override def inverse: CrsTransform = LonLatToLcc(p, epsg)
-    override def toSourcePt(x: Double, y: Double): (Double, Double) =
-      Lcc.invLonLat(x, y, p)(Utm.DblAr)
-    def sxSql(x: String, y: String): String = Lcc.invLonLat(x, y, p)(Utm.SqlAr)._1
-    def sySql(x: String, y: String): String = Lcc.invLonLat(x, y, p)(Utm.SqlAr)._2
-    override def heavy: Boolean = true
   }
 
   /** Forward LCC (lon/lat degrees -> conic meters) — srcToTarget for
     * the pooling kernels and the defaultTarget bounds projection. */
-  final case class LonLatToLcc(p: Lcc.Params, epsg: String) extends CrsTransform {
-    override def sourceX(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = true)
-    override def sourceY(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = false)
+  final case class LonLatToLcc(p: Lcc.Params, epsg: String) extends Projection {
+    def project[T](x: T, y: T)(implicit F: Utm.Ar[T]): (T, T) = Lcc.fwdEN(x, y, p)
     override def inverse: CrsTransform = LccToLonLat(p, epsg)
-    override def toSourcePt(x: Double, y: Double): (Double, Double) =
-      Lcc.fwdEN(x, y, p)(Utm.DblAr)
-    def sxSql(x: String, y: String): String = Lcc.fwdEN(x, y, p)(Utm.SqlAr)._1
-    def sySql(x: String, y: String): String = Lcc.fwdEN(x, y, p)(Utm.SqlAr)._2
-    override def heavy: Boolean = true
   }
 
   /**
@@ -241,70 +311,36 @@ object Warp {
    * back-project to lon/lat through the Snyder inverse
    * ([[Albers.invLonLat]]) — the EQUAL-AREA family, complementing the
    * conformal UTM/LCC/polar-stereo trio (area-true pixels are what
-   * pixel-count -> hectare aggregations assume). Same typeclass
-   * discipline: Column and SQL twins share one generic series.
+   * pixel-count -> hectare aggregations assume).
    */
-  final case class AlbersToLonLat(p: Albers.Params, epsg: String) extends CrsTransform {
-    override def sourceX(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = true)
-    override def sourceY(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = false)
+  final case class AlbersToLonLat(p: Albers.Params, epsg: String) extends Projection {
+    def project[T](x: T, y: T)(implicit F: Utm.Ar[T]): (T, T) = Albers.invLonLat(x, y, p)
     override def inverse: CrsTransform = LonLatToAlbers(p, epsg)
-    override def toSourcePt(x: Double, y: Double): (Double, Double) =
-      Albers.invLonLat(x, y, p)(Utm.DblAr)
-    def sxSql(x: String, y: String): String = Albers.invLonLat(x, y, p)(Utm.SqlAr)._1
-    def sySql(x: String, y: String): String = Albers.invLonLat(x, y, p)(Utm.SqlAr)._2
-    override def heavy: Boolean = true
   }
 
   /** Forward Albers (lon/lat degrees -> equal-area conic meters) —
     * srcToTarget for pooling and defaultTarget bounds projection. */
-  final case class LonLatToAlbers(p: Albers.Params, epsg: String) extends CrsTransform {
-    override def sourceX(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = true)
-    override def sourceY(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = false)
+  final case class LonLatToAlbers(p: Albers.Params, epsg: String) extends Projection {
+    def project[T](x: T, y: T)(implicit F: Utm.Ar[T]): (T, T) = Albers.fwdEN(x, y, p)
     override def inverse: CrsTransform = AlbersToLonLat(p, epsg)
-    override def toSourcePt(x: Double, y: Double): (Double, Double) =
-      Albers.fwdEN(x, y, p)(Utm.DblAr)
-    def sxSql(x: String, y: String): String = Albers.fwdEN(x, y, p)(Utm.SqlAr)._1
-    def sySql(x: String, y: String): String = Albers.fwdEN(x, y, p)(Utm.SqlAr)._2
-    override def heavy: Boolean = true
   }
 
   /**
    * Polar-stereographic CRS (e.g. NSIDC EPSG:3413), target->source:
    * target meters back-project to lon/lat through the Snyder inverse
    * with the composed full-quadrant atan2 ([[PolarStereo.invLonLat]])
-   * — the polar-grid family, completing UTM + LCC. Same typeclass
-   * discipline: Column and SQL twins share one generic series.
+   * — the polar-grid family, completing UTM + LCC.
    */
-  final case class PsToLonLat(p: PolarStereo.Params, epsg: String) extends CrsTransform {
-    override def sourceX(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = true)
-    override def sourceY(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = false)
+  final case class PsToLonLat(p: PolarStereo.Params, epsg: String) extends Projection {
+    def project[T](x: T, y: T)(implicit F: Utm.Ar[T]): (T, T) = PolarStereo.invLonLat(x, y, p)
     override def inverse: CrsTransform = LonLatToPs(p, epsg)
-    override def toSourcePt(x: Double, y: Double): (Double, Double) =
-      PolarStereo.invLonLat(x, y, p)(Utm.DblAr)
-    def sxSql(x: String, y: String): String = PolarStereo.invLonLat(x, y, p)(Utm.SqlAr)._1
-    def sySql(x: String, y: String): String = PolarStereo.invLonLat(x, y, p)(Utm.SqlAr)._2
-    override def heavy: Boolean = true
   }
 
   /** Forward polar stereographic (lon/lat degrees -> polar meters) —
     * srcToTarget for pooling and defaultTarget bounds projection. */
-  final case class LonLatToPs(p: PolarStereo.Params, epsg: String) extends CrsTransform {
-    override def sourceX(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = true)
-    override def sourceY(x: Column, y: Column): Column =
-      crsCol(this, x, y, takeX = false)
+  final case class LonLatToPs(p: PolarStereo.Params, epsg: String) extends Projection {
+    def project[T](x: T, y: T)(implicit F: Utm.Ar[T]): (T, T) = PolarStereo.fwdEN(x, y, p)
     override def inverse: CrsTransform = PsToLonLat(p, epsg)
-    override def toSourcePt(x: Double, y: Double): (Double, Double) =
-      PolarStereo.fwdEN(x, y, p)(Utm.DblAr)
-    def sxSql(x: String, y: String): String = PolarStereo.fwdEN(x, y, p)(Utm.SqlAr)._1
-    def sySql(x: String, y: String): String = PolarStereo.fwdEN(x, y, p)(Utm.SqlAr)._2
-    override def heavy: Boolean = true
   }
 
   /**
@@ -625,7 +661,7 @@ object Warp {
   private def forwardProject(stack: Stack, target: GridMeta,
                              srcToTarget: CrsTransform): DataFrame = {
     val m = stack.meta
-    val proj = stack.df
+    stack.df
       .withColumn("__x", grid_x(col("row"), col("col"), m))
       .withColumn("__y", grid_y(col("row"), col("col"), m))
       .withColumn("__tx", srcToTarget.sourceX(col("__x"), col("__y")))
@@ -633,16 +669,6 @@ object Warp {
       .withColumn("__trow", grid_row(col("__tx"), col("__ty"), target))
       .withColumn("__tcol", grid_col(col("__tx"), col("__ty"), target))
       .where(in_bounds(col("__trow"), col("__tcol"), target))
-    // heavy transforms (Krüger series) materialize once: fused into the
-    // downstream hash-agg the series exceeds janino's 64 KB method
-    // limit and the WHOLE agg stage bailed out of fusion. With the
-    // persist barrier the aggregation groups on bare cached attributes
-    // (fused, compiled); only the one-time cache BUILD projection may
-    // still exceed the fused-method limit, in which case it runs as a
-    // plain ProjectExec whose UnsafeProjection splits the expression
-    // into many small methods — codegen'd either way, never
-    // row-interpreted.
-    if (srcToTarget.heavy) graft.plans.Caches.track(proj) else proj
   }
 
   /**
@@ -721,25 +747,29 @@ object Warp {
 }
 
 /**
- * Opaque scalar kernel for the heavy closed-form CRS series (UTM /
- * LCC / Albers / polar stereographic): ONE Catalyst expression node
- * whose eval/codegen calls the transform's own [[Warp.CrsTransform.toSourcePt]]
- * — the [[Utm.DblAr]] instantiation of the SAME generic series the
- * Column/SQL twins instantiate, so values are bit-identical (Catalyst's
- * Sin/Atan/Exp/Log/Sqrt codegen bottoms out in the same java.lang.Math
- * ops in the same order). The [[Epsg.GeoChain]] pattern, generalized.
+ * Opaque scalar kernel — the ONE engine path of every closed-form CRS
+ * projection ([[Warp.Projection]]): a Catalyst expression node whose
+ * eval/codegen calls the transform's [[Warp.Projection.toSourcePt]],
+ * the [[Utm.DblAr]] instance of the generic series. The Column
+ * transforms, the SQL `utm_*` functions and the driver-side grid
+ * derivation therefore run the same JVM calls and return the same
+ * bits. (An inlined Catalyst tree of the same series would not:
+ * Catalyst's Exp/Log compile to java.lang.StrictMath, DblAr uses
+ * java.lang.Math, and the two differ in the last bit on some inputs.)
  *
- * WHY: the inline Column instantiation duplicates shared subtrees
- * textually (sinh/atanh double their argument per level), so the
- * forward Krüger series expands to a ~250 KB plan text whose fused
- * whole-stage method blows janino's 64 KB limit — the stage paid a
- * failed compile and fell back to split-method projection, and every
- * optimizer walk carried the megabyte tree. A 3-node tree keeps
- * WholeStageCodegen fused and makes plan transforms O(1).
+ * WHY opaque: the inline Column instantiation duplicates shared
+ * subtrees textually (sinh/atanh double their argument per level), so
+ * the forward Krüger series expands to a ~250 KB plan text whose fused
+ * whole-stage method blows janino's 64 KB limit, and alias-substituting
+ * optimizer walks (dynamic partition pruning's lineage search) re-inline
+ * any staged projection — the datum-shifted TM chain re-expanded to
+ * 5.3 MB of text. A 3-node tree keeps WholeStageCodegen fused, makes
+ * plan transforms O(1), and ships the parameters as a plan reference
+ * object (the [[graft.functions.VecDot]] pattern).
  */
 case class CrsPoint(left: org.apache.spark.sql.catalyst.expressions.Expression,
                     right: org.apache.spark.sql.catalyst.expressions.Expression,
-                    t: Warp.CrsTransform, takeX: Boolean)
+                    t: Warp.Projection, takeX: Boolean)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
   import org.apache.spark.sql.catalyst.expressions.Expression
   import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}

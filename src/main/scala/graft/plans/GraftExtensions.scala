@@ -73,17 +73,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // ClassCastExceptions on BIGINT literals and garbage-evals
     // non-foldable expressions — ADVICE r4)
     reg("top_k", args => graft.functions.BoundedTopK(args(0), intLiteral(args(1), "top_k k")))
-    // UTM transverse-Mercator surface for SQL users: zone and
-    // north (0/1) must be integer literals (they select plan constants)
-    import graft.operators.Utm
-    def utm(args: Seq[Expression],
-            f: (Expression, Expression, Int, Boolean) => Expression): Expression =
-      f(args(0), args(1), intLiteral(args(2), "utm zone"),
-        intLiteral(args(3), "utm north flag") != 0)
-    reg("utm_lon", args => utm(args, (e, n, z, nf) => Utm.invLonLat(e, n, z, nf)(Utm.ExprAr)._1))
-    reg("utm_lat", args => utm(args, (e, n, z, nf) => Utm.invLonLat(e, n, z, nf)(Utm.ExprAr)._2))
-    reg("utm_easting", args => utm(args, (lo, la, z, nf) => Utm.fwdEN(lo, la, z, nf)(Utm.ExprAr)._1))
-    reg("utm_northing", args => utm(args, (lo, la, z, nf) => Utm.fwdEN(lo, la, z, nf)(Utm.ExprAr)._2))
+    // UTM transverse-Mercator surface for SQL users: zone and north
+    // (0/1) must be integer literals (they select the transform); the
+    // functions evaluate through Warp's own CrsPoint kernel, with the
+    // coordinates cast to double (a no-op cast is simplified away)
+    import graft.operators.{CrsPoint, Warp}
+    def utm(args: Seq[Expression], forward: Boolean, takeX: Boolean): Expression = {
+      val zone = intLiteral(args(2), "utm zone")
+      val north = intLiteral(args(3), "utm north flag") != 0
+      val t = if (forward) Warp.LonLatToUtm(zone, north) else Warp.UtmToLonLat(zone, north)
+      CrsPoint(Cast(args(0), DoubleType), Cast(args(1), DoubleType), t, takeX)
+    }
+    reg("utm_lon", utm(_, forward = false, takeX = true))
+    reg("utm_lat", utm(_, forward = false, takeX = false))
+    reg("utm_easting", utm(_, forward = true, takeX = true))
+    reg("utm_northing", utm(_, forward = true, takeX = false))
 
     e.injectOptimizerRule(_ => CellParentPruning)
     e.injectPlannerStrategy(_ => PipAssignStrategy)

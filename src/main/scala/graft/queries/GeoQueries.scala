@@ -346,11 +346,11 @@ object GeoQueries {
     // to_crs onto the British National Grid (EPSG:27700) via the EPSG
     // REGISTRY — the first target on a LEGACY DATUM: the back-
     // projection chains the generic-TM inverse on Airy 1830 with the
-    // OSGB36->WGS84 Helmert hop (ECEF + Bowring). The chain evaluates
-    // STAGED (CrsTransform.bindSource) because the composed scalar
-    // text explodes combinatorially (5.3 MB vs 4 KB/stage); the oracle
-    // replays the SAME stage boundaries as nested SELECTs, so IEEE op
-    // order stays identical by construction.
+    // OSGB36->WGS84 Helmert hop (ECEF + Bowring). The engine runs the
+    // chain in one opaque CrsPoint node; the oracle replays it STAGED
+    // as nested SELECTs (TmercToLonLat.stagedSql), because the composed
+    // scalar text explodes combinatorially (5.3 MB vs 4 KB/stage) — a
+    // stored double reloads exactly, so IEEE op order stays identical.
     "q112_to_crs_bng" -> ((s, _) => {
       import graft.sources.RasterStack
       val st = graft.operators.Stack(

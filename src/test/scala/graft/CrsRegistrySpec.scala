@@ -39,13 +39,18 @@ class CrsRegistrySpec extends AnyFunSuite {
     assert(math.abs(n2 - 10000000.0) < 1e-6)
   }
 
-  test("generic TM on WGS84 degenerates to the UTM kernel") {
-    val utm31 = Tmerc.Params(Tmerc.WGS84, 0.0, 3.0, Utm.K0, 500000.0, 0.0)
-    for ((lon, lat) <- Seq((2.1, 43.7), (5.9, 30.2), (0.4, 53.9))) {
-      val (e1, n1) = Tmerc.fwdEN(lon, lat, utm31)(Utm.DblAr)
-      val (e2, n2) = Utm.fwdEN(lon, lat, 31, north = true)(Utm.DblAr)
-      assert(math.abs(e1 - e2) < 1e-6 && math.abs(n1 - n2) < 1e-6)
+  test("UTM zones are TM parameter sets: Utm.params pinned for zones 1..60 N/S") {
+    for (z <- 1 to 60; north <- Seq(true, false)) {
+      val p = Utm.params(z, north)
+      assert(p.ell == Tmerc.WGS84 && p.lat0Deg === 0.0)
+      assert(p.lon0Deg === -177.0 + 6.0 * (z - 1), s"zone $z")
+      assert(p.k0 === 0.9996 && p.fe === 500000.0)
+      assert(p.fn === (if (north) 0.0 else 10000000.0))
+      // the natural origin on the equator: the meridian-arc offset is
+      // exactly +0.0, so the generic series adds/subtracts a true zero
+      assert(java.lang.Double.doubleToLongBits(p.m0) === 0L, s"m0 of zone $z north=$north")
     }
+    Seq(0, 61).foreach(z => intercept[IllegalArgumentException](Utm.params(z, north = true)))
   }
 
   test("EPSG:27700 full chain round-trips E/N across the BNG domain") {
@@ -119,6 +124,89 @@ class CrsRegistrySpec extends AnyFunSuite {
       val (lon2, lat2) = Tmerc.invLonLat(e, n, p)(Utm.DblAr)
       // order-n^3 Krueger truncation at 5.5 deg from the central meridian
       assert(math.abs(lon2 - lon) < 1e-8 && math.abs(lat2 - lat) < 1e-8)
+    }
+  }
+
+  // Out-of-domain inputs through the engine kernel: (lon, lat) probes
+  // for the forward transforms, (easting, northing) for the inverses.
+  private val NaN = Double.NaN
+  private val Inf = Double.PositiveInfinity
+  private val lonLatProbes = Seq((NaN, 45.0), (2.0, NaN), (Inf, 45.0), (2.0, -Inf),
+    (2.0, 95.0), (2.0, -90.5), (400.0, 45.0), (2.0, 90.0))
+  private val meterProbes = Seq((NaN, 5e5), (5e5, NaN), (Inf, 5e5), (5e5, -Inf),
+    (1e12, 5e5), (5e5, -1e12))
+  private val nan4 = Seq.fill(4)((NaN, NaN))
+
+  test("CrsPoint pins NaN, +-Inf and out-of-domain outputs for every projection family") {
+    // Pinned engine outputs. Some non-finite inputs come out FINITE:
+    // Utm.DblAr.gt sends a NaN operand to the false branch, where
+    // DuckDB's CASE WHEN would take the true branch (see Utm.Ar) — e.g.
+    // a NaN easting on EPSG:27700 yields lon 0.0, a NaN northing on
+    // EPSG:3413 yields lon 45.0. No fixture query feeds NaN to a
+    // projection; this pins what the engine does if a caller does.
+    val pinned: Seq[(Warp.CrsTransform, Seq[(Double, Double)], Seq[(Double, Double)])] = Seq(
+      (Epsg.fromLonLat(32631), lonLatProbes, nan4 ++ Seq(
+        (490269.85774024023, 9439817.32721898), (499025.7381101803, -9942148.808297444),
+        (3402392.4145083064, 5695276.670252825), (500000.0, 9997964.943020998))),
+      (Epsg.toLonLat(32631), meterProbes, nan4 ++ Seq(
+        (NaN, NaN), (3.0, -32.05379997814822))),
+      (Epsg.fromLonLat(27700), lonLatProbes, nan4 ++ Seq(
+        (361224.59831243195, -1.4966861566610685E7), (396211.85301963135, 4413952.309103336),
+        (3683669.2132730577, 390220.14225194417), (400113.8135953266, -1.552374403905491E7))),
+      (Epsg.toLonLat(27700), meterProbes, Seq.fill(5)((0.0, NaN)) ++ Seq(
+        (-1.0963273991271767, -6.491931208908619))),
+      (Epsg.fromLonLat(2193), lonLatProbes, nan4 ++ Seq(
+        (1512778.6325705436, 553428.701109862), (1591267.2082448856, 1.9942827565944824E7),
+        (-2055828.607871118, 3822983.0652109487), (1600000.0, 2035.0570612289011))),
+      (Epsg.toLonLat(2193), meterProbes, nan4 ++ Seq(
+        (NaN, NaN), (191.16537130887656, -56.85759299620071))),
+      (Epsg.fromLonLat(2154), lonLatProbes, nan4 ++ Seq(
+        (NaN, NaN), (NaN, NaN),
+        (-5215428.947955476, 1.0726004086325726E7), (700000.0, 1.265561204987599E7))),
+      (Epsg.toLonLat(2154), meterProbes, Seq(
+        (NaN, NaN), (NaN, NaN), (127.03395378961089, -90.0), (3.0, -90.0),
+        (127.03299395181851, -89.99998171041908), (2.9999842077063756, -89.99998171075573))),
+      (Epsg.fromLonLat(5070), lonLatProbes, nan4 ++ Seq(
+        (3523208.858083407, 7819042.8847336015), (1.4499652419344734E7, 1245735.8070220947),
+        (-6542448.443662539, 6296459.252455298), (3468789.6265557716, 7851632.15809594))),
+      (Epsg.toLonLat(5070), meterProbes, Seq(
+        (NaN, NaN), (NaN, NaN), (53.277801691740905, NaN), (-96.0, NaN),
+        (53.27690562968357, NaN), (-95.99995248387172, NaN))),
+      (Epsg.fromLonLat(3413), lonLatProbes, nan4 ++ Seq(
+        (-396369.3526479964, 369620.40102687554), (-2.0529122266949925E9, 1.91437162190954E9),
+        (5112147.993018035, -447254.9956558836), (0.0, 0.0))),
+      (Epsg.toLonLat(3413), meterProbes, Seq(
+        (NaN, NaN), (45.0, NaN), (45.0, -90.0), (-45.0, -90.0),
+        (45.00002864788975, -89.99859648982188), (-44.999971352110244, -89.99859648982188))))
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.DoubleType
+    import graft.operators.CrsPoint
+    val (x, y) = (BoundReference(0, DoubleType, nullable = false),
+      BoundReference(1, DoubleType, nullable = false))
+    for ((t, probes, want) <- pinned) {
+      val p = t.asInstanceOf[Warp.Projection]
+      // the transform's Columns are exactly these kernel nodes
+      Seq(true -> t.sourceX(col("x"), col("y")), false -> t.sourceY(col("x"), col("y"))).foreach {
+        case (takeX, c) => GraftBridge.expression(c) match {
+          case CrsPoint(_, _, `p`, `takeX`) =>
+          case other => fail(s"$t: not a CrsPoint column: $other")
+        }
+      }
+      val exprs = Seq(CrsPoint(x, y, p, takeX = true), CrsPoint(x, y, p, takeX = false))
+      val compiled = UnsafeProjection.create(exprs)
+      assert(probes.size === want.size)
+      // Double.equals compares bits (NaN == NaN, +0.0 != -0.0)
+      def same(a: (Any, Any), w: (Double, Double)) = a._1.equals(w._1) && a._2.equals(w._2)
+      for ((in, w) <- probes.zip(want)) {
+        val row = InternalRow(in._1, in._2)
+        val gen = compiled(row)
+        assert(same((gen.getDouble(0), gen.getDouble(1)), w), s"$t $in generated code: pinned $w")
+        assert(same((exprs(0).eval(row), exprs(1).eval(row)), w), s"$t $in interpreted: pinned $w")
+        assert(same(t.toSourcePt(in._1, in._2), w), s"$t $in scalar twin: pinned $w")
+      }
     }
   }
 }

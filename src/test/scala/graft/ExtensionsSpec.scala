@@ -75,6 +75,30 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(r.getDouble(1) === 0.0)      // equator
     assert(math.abs(r.getDouble(2) - 5.1) < 1e-7)
     assert(math.abs(r.getDouble(3) - 47.3) < 1e-7)
+    // the SQL functions run the same kernel as Warp's zone transforms:
+    // bit-identical over a lon/lat grid across zone 31 (+-0.5 deg past
+    // its edges) and a meter grid, both hemispheres
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    for (nf <- Seq(1, 0)) {
+      val fwd = graft.operators.Warp.LonLatToUtm(31, nf == 1)
+      spark.sql(
+        s"""SELECT lon, lat, utm_easting(lon, lat, 31, $nf), utm_northing(lon, lat, 31, $nf)
+           |FROM (SELECT -0.5D + CAST(id % 141 AS DOUBLE) * 0.05D AS lon,
+           |             -80.0D + CAST(id DIV 141 AS DOUBLE) * 0.5D AS lat
+           |      FROM range(${141 * 329}))""".stripMargin).collect().foreach { g =>
+        val (e, n) = fwd.toSourcePt(g.getDouble(0), g.getDouble(1))
+        assert(bits(g.getDouble(2)) === bits(e) && bits(g.getDouble(3)) === bits(n), s"$g north=$nf")
+      }
+      val inv = fwd.inverse
+      spark.sql(
+        s"""SELECT e, n, utm_lon(e, n, 31, $nf), utm_lat(e, n, 31, $nf)
+           |FROM (SELECT 100000.0D + CAST(id % 81 AS DOUBLE) * 10000.0D AS e,
+           |             CAST(id DIV 81 AS DOUBLE) * 100000.0D AS n FROM range(${81 * 94}))""".stripMargin)
+        .collect().foreach { g =>
+          val (lon, lat) = inv.toSourcePt(g.getDouble(0), g.getDouble(1))
+          assert(bits(g.getDouble(2)) === bits(lon) && bits(g.getDouble(3)) === bits(lat), s"$g north=$nf")
+        }
+    }
     val ex = intercept[Exception](spark.sql("SELECT utm_lon(1.0D, 2.0D, id, 1) FROM range(1)"))
     assert(ex.getMessage.contains("integer literal"))
   }

@@ -121,15 +121,20 @@ class GeometrySpec extends AnyFunSuite {
 }
 
 /**
- * UTM transverse-Mercator series (operators.Utm): scalar-instance
- * checks — the Column/SQL instances are the same generic code, and
- * q68 pins them cross-engine.
+ * UTM zones (operators.Utm.params over the generic TM series):
+ * scalar-instance checks through the zone transforms — the engine
+ * kernel evaluates the same instance, the SQL twin is the same generic
+ * code, and q68 pins them cross-engine.
  */
 class UtmSpec extends AnyFunSuite {
-  import graft.operators.Utm
+  import graft.operators.Warp.{LonLatToUtm, UtmToLonLat}
+  private def fwd(lon: Double, lat: Double, north: Boolean = true) =
+    LonLatToUtm(31, north).toSourcePt(lon, lat)
+  private def inv(e: Double, n: Double, north: Boolean = true) =
+    UtmToLonLat(31, north).toSourcePt(e, n)
 
   test("central meridian maps to the false easting exactly; equator to N=0") {
-    val (e, n) = Utm.fwdEN(3.0, 0.0, 31, north = true)(Utm.DblAr)
+    val (e, n) = fwd(3.0, 0.0)
     assert(e === 500000.0)
     assert(n === 0.0)
   }
@@ -137,32 +142,32 @@ class UtmSpec extends AnyFunSuite {
   test("meridian arc at 45N matches the textbook WGS84 value (k0-scaled)") {
     // meridian distance from the equator to lat 45 deg on WGS84 is
     // 4984944.378 m (Snyder, Table 15 / standard series); N = k0 * arc
-    val (_, n) = Utm.fwdEN(3.0, 45.0, 31, north = true)(Utm.DblAr)
+    val (_, n) = fwd(3.0, 45.0)
     assert(math.abs(n - 0.9996 * 4984944.378) < 1.0)
   }
 
   test("forward/inverse round-trip over the zone window: < 1e-7 deg") {
     for (lon <- BigDecimal(0.3) to BigDecimal(5.7) by 0.9;
          lat <- BigDecimal(-55.0) to BigDecimal(55.0) by 13.75) {
-      val (e, n) = Utm.fwdEN(lon.toDouble, lat.toDouble, 31, north = true)(Utm.DblAr)
-      val (lon2, lat2) = Utm.invLonLat(e, n, 31, north = true)(Utm.DblAr)
+      val (e, n) = fwd(lon.toDouble, lat.toDouble)
+      val (lon2, lat2) = inv(e, n)
       assert(math.abs(lon2 - lon.toDouble) < 1e-7, s"lon @($lon,$lat)")
       assert(math.abs(lat2 - lat.toDouble) < 1e-7, s"lat @($lon,$lat)")
     }
   }
 
   test("southern hemisphere: false northing 10^7, round-trip holds") {
-    val (e, n) = Utm.fwdEN(2.1, -33.7, 31, north = false)(Utm.DblAr)
+    val (e, n) = fwd(2.1, -33.7, north = false)
     assert(n > 6000000.0 && n < 10000000.0)
-    val (lon2, lat2) = Utm.invLonLat(e, n, 31, north = false)(Utm.DblAr)
+    val (lon2, lat2) = inv(e, n, north = false)
     assert(math.abs(lon2 - 2.1) < 1e-7 && math.abs(lat2 - (-33.7)) < 1e-7)
   }
 
   test("scale factor at the central meridian is k0 within the series order") {
     // two points 1 km apart along the CM: projected distance / true
     // meridian distance ~ k0 (use the round-trip-consistent arc)
-    val (_, n1) = Utm.fwdEN(3.0, 45.0, 31, north = true)(Utm.DblAr)
-    val (_, n2) = Utm.fwdEN(3.0, 45.009, 31, north = true)(Utm.DblAr)
+    val (_, n1) = fwd(3.0, 45.0)
+    val (_, n2) = fwd(3.0, 45.009)
     val arcPerDeg = 111131.7 // meridian arc meters/deg near 45N (textbook)
     val ratio = (n2 - n1) / (0.009 * arcPerDeg)
     assert(math.abs(ratio - 0.9996) < 2e-4)
