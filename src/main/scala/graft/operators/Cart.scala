@@ -18,8 +18,8 @@ import graft.operators.Predict.{Leaf, Split, Tree}
  * it collects a DETERMINISTIC bounded sample (smallest `sampleCap` rows
  * by seeded [[graft.functions.sample_hash]], the trainCentroids
  * collect-bound discipline) and fits locally; the resulting frozen
- * [[Predict.Tree]] literals then compile to codegen'd nested-CASE
- * Columns that scale to any raster size.
+ * [[Predict.Tree]] models then score in-plan through the codegen'd
+ * [[ForestEval]] kernel, which scales to any raster size.
  *
  * Determinism: bootstrap resampling and per-node feature subsampling
  * draw from a splitmix-style LCG seeded by (seed, tree); candidate

@@ -315,21 +315,20 @@ object Focal {
    * and `drop` is that steepest drop (0.0 likewise). NULL drops
    * (missing neighbors at borders / beside nodata) compare false and
    * are skipped, so border cells route among the neighbors that exist.
-   * The inputs MUST be simple column references (the fold nests each
-   * accumulator twice per step — named columns keep the expression
-   * tree linear, not exponential).
+   * Each step reads the previous best drop twice in its own CASE and
+   * once more in the code's, so an inline fold copies the accumulators
+   * at every step and the tree doubles eight times. `bind` names each
+   * step's (code, drop) pair as it is made: the engine binds them to
+   * columns, so the next step refers to them instead of copying them;
+   * the default (identity) inlines, which the SQL twin's text keeps.
    */
-  def d8Parts[T](drops: Seq[(Int, T)])(implicit F: Ar[T]): (T, T) = {
-    var bestCode: T = F.lit(0.0)
-    var bestDrop: T = F.lit(0.0)
-    drops.foreach { case (code, d) =>
-      val c2 = F.gt(d, bestDrop, F.lit(code.toDouble), bestCode)
-      val d2 = F.gt(d, bestDrop, d, bestDrop)
-      bestCode = c2
-      bestDrop = d2
+  def d8Parts[T](drops: Seq[(Int, T)],
+                 bind: (Int, T, T) => (T, T) = (_: Int, c: T, d: T) => (c, d))
+                (implicit F: Ar[T]): (T, T) =
+    drops.foldLeft((F.lit(0.0), F.lit(0.0))) { case ((bestCode, bestDrop), (code, d)) =>
+      bind(code, F.gt(d, bestDrop, F.lit(code.toDouble), bestCode),
+        F.gt(d, bestDrop, d, bestDrop))
     }
-    (bestCode, bestDrop)
-  }
 
   /**
    * D8 steepest-descent flow direction for integral band `b` — the
@@ -364,11 +363,18 @@ object Focal {
       d.withColumn(s"_d$code",
         d8Drop[Column](col(b), col(nbr(code)), dist)(Utm.ColAr))
     }
+    // one projection per fold step: the step's pair becomes two columns
+    var p4 = p3
     val (dirD, dropD) = d8Parts[Column](
-      D8Codes.map { case (code, _, _, _) => code -> col(s"_d$code") })(Utm.ColAr)
-    p3.withColumn("d8_dir", when(col(b).isNotNull, dirD.cast("long")))
+      D8Codes.map { case (code, _, _, _) => code -> col(s"_d$code") },
+      (code, c, d) => {
+        p4 = p4.withColumns(Map(s"_bc$code" -> c, s"_bd$code" -> d))
+        (col(s"_bc$code"), col(s"_bd$code"))
+      })(Utm.ColAr)
+    p4.withColumn("d8_dir", when(col(b).isNotNull, dirD.cast("long")))
       .withColumn("d8_drop", when(col(b).isNotNull, dropD))
-      .drop(nbr.values.toSeq ++ D8Codes.map(c => s"_d${c._1}"): _*)
+      .drop(nbr.values.toSeq ++ D8Codes.flatMap { case (code, _, _, _) =>
+        Seq(s"_d$code", s"_bc$code", s"_bd$code") }: _*)
   }
 
   /** SQL twins of the D8 pieces over drop-column names. */

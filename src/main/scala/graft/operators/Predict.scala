@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /**
  * Batch scoring (reference raster.py:845-1218, kernels _prediction.py):
@@ -13,8 +18,10 @@ import org.apache.spark.sql.functions._
  *
  * Physical shapes:
  *  - models exposing a Column expression ([[ColumnPredictor]]) score
- *    inside WholeStageCodegen — zero serialization (the common case:
- *    linear/tree-lite models compile to expressions);
+ *    inside WholeStageCodegen — zero serialization. Linear and squash
+ *    models compile to arithmetic; tree ensembles to one [[ForestEval]]
+ *    kernel call per output, which runs the scalar twin over the
+ *    plan-shipped model;
  *  - black-box models score via a vectorized-per-row Scala UDF over an
  *    array of features (the Spark analogue of the reference's
  *    block-flattened `estimator.predict` batches).
@@ -61,12 +68,17 @@ object Predict {
    * sigmoid-shaped link using only +,*,/,abs so both engines produce
    * identical IEEE doubles (no libm). 2 classes: (1-p1, p1).
    */
-  final case class SquashModel(lin: LinearModel) extends ProbPredictor {
+  final case class SquashModel(lin: LinearModel) extends ColumnProbPredictor {
     override def numClasses: Int = 2
     override def predictProba(x: Array[Double]): Array[Double] = {
       val z = lin.predict(x)
       val p1 = 0.5 + z / (2.0 * (1.0 + math.abs(z)))
       Array(1.0 - p1, p1)
+    }
+    override def probColumns(features: Seq[Column]): Seq[Column] = {
+      val z = lin.column(features)
+      val p1 = lit(0.5) + z / (lit(2.0) * (lit(1.0) + abs(z)))
+      Seq(lit(1.0) - p1, p1)
     }
   }
 
@@ -76,23 +88,18 @@ object Predict {
 
   /** CART node: sklearn split semantics — `x(feature) <= thresh` goes
     * lo. Leaves carry an output VECTOR (length 1 for regression, class
-    * distribution for classification) so one ADT serves both. */
+    * distribution for classification) so one ADT serves both. A NaN
+    * threshold is rejected: Spark and DuckDB order NaN above every
+    * double, so `x <= NaN` would hold there and fail in [[treeEval]]. */
   sealed trait Tree extends Serializable
   final case class Leaf(values: Array[Double]) extends Tree
-  final case class Split(feature: Int, thresh: Double, lo: Tree, hi: Tree) extends Tree
-
-  /** Output `c` of a tree as a nested-CASE Column — pure comparisons
-    * and literals, whole-stage-codegen'd. A null feature fails the
-    * predicate and takes the hi branch, same as the SQL CASE twin; the
-    * predict() mask nulls such pixels anyway. */
-  def treeCol(t: Tree, feats: Seq[Column], c: Int): Column = t match {
-    case Leaf(v) => lit(v(c))
-    case Split(f, th, lo, hi) =>
-      when(feats(f) <= lit(th), treeCol(lo, feats, c)).otherwise(treeCol(hi, feats, c))
+  final case class Split(feature: Int, thresh: Double, lo: Tree, hi: Tree) extends Tree {
+    require(!thresh.isNaN, "split threshold is NaN")
   }
 
-  /** SQL twin of [[treeCol]] — identical branch/literal text, so both
-    * engines return the same frozen leaf double. */
+  /** SQL text of output `c` of a tree: nested CASE over the frozen
+    * branch/leaf literals (the oracle's twin of [[treeEval]]; a NULL
+    * feature fails `<=` and takes the hi branch, as a NaN does). */
   def treeSql(t: Tree, feats: Seq[String], c: Int): String = t match {
     case Leaf(v) => graft.sources.OracleLit.d(v(c))
     case Split(f, th, lo, hi) =>
@@ -100,21 +107,50 @@ object Predict {
         s"THEN ${treeSql(lo, feats, c)} ELSE ${treeSql(hi, feats, c)} END)"
   }
 
-  /** Scalar twin (driver-side / black-box parity). */
+  /** Output `c` of a tree for one feature row — the one evaluation of
+    * a tree, run by the scalar models and the [[ForestEval]] kernel.
+    * The kernel passes a NULL feature as NaN, which fails `<=` and goes
+    * hi exactly like the SQL twin's NULL. */
   def treeEval(t: Tree, x: Array[Double], c: Int): Double = t match {
     case Leaf(v) => v(c)
     case Split(f, th, lo, hi) => if (x(f) <= th) treeEval(lo, x, c) else treeEval(hi, x, c)
   }
 
-  /** Forest regressor: mean of the trees' outputs, left-associative sum
-    * then ONE division — the oracle's `((t1 + t2) + ...) / n` text
-    * reproduces it bit-for-bit (the LinearModel discipline). */
-  final case class ForestRegressorModel(trees: Array[Tree]) extends ColumnPredictor {
+  /** Mean of output `c` over the trees: left-associative sum, then ONE
+    * division — the oracle's `((t1 + t2) + ...) / n` text reproduces it
+    * bit-for-bit (the LinearModel discipline). */
+  def forestMean(trees: Array[Tree], x: Array[Double], c: Int): Double = {
+    var acc = treeEval(trees(0), x, c)
+    var i = 1
+    while (i < trees.length) { acc += treeEval(trees(i), x, c); i += 1 }
+    acc / trees.length
+  }
+
+  /** numpy argmax: the first i with p_i >= every later p_j. `>=` is
+    * the engines' double order, in which NaN sits above every value. */
+  def firstMax(p: Array[Double]): Int = {
+    def ge(a: Double, b: Double) = a >= b || a.isNaN
+    var i = 0
+    while (i < p.length - 1 && !(i + 1 until p.length).forall(j => ge(p(i), p(j)))) i += 1
+    i
+  }
+
+  /** A tree ensemble whose outputs [[ForestEval]] evaluates in-plan. */
+  sealed trait Forest extends Serializable {
+    def trees: Array[Tree]
+    /** Output `out` for one feature row (see [[ForestEval]]). */
+    def output(x: Array[Double], out: Int): Double
+    protected def kernel(features: Seq[Column], out: Int): Column =
+      GraftBridge.column(ForestEval(
+        features.map(f => Cast(GraftBridge.expression(f), DoubleType)), this, out))
+  }
+
+  /** Forest regressor: mean of the trees' outputs ([[forestMean]]). */
+  final case class ForestRegressorModel(trees: Array[Tree]) extends ColumnPredictor with Forest {
     require(trees.nonEmpty)
-    override def predict(x: Array[Double]): Double =
-      trees.map(treeEval(_, x, 0)).reduce(_ + _) / trees.length
-    override def column(features: Seq[Column]): Column =
-      trees.toSeq.map(treeCol(_, features, 0)).reduce(_ + _) / lit(trees.length.toDouble)
+    override def predict(x: Array[Double]): Double = forestMean(trees, x, 0)
+    override def output(x: Array[Double], out: Int): Double = predict(x)
+    override def column(features: Seq[Column]): Column = kernel(features, 0)
     def sql(feats: Seq[String]): String =
       trees.toSeq.map(treeSql(_, feats, 0)).reduce((a, b) => s"($a + $b)") +
         s" / ${trees.length}.0"
@@ -129,38 +165,27 @@ object Predict {
   /**
    * Forest classifier with sklearn semantics: `predict_proba` = mean of
    * the trees' leaf class distributions; `predict` = argmax with the
-   * numpy first-max tie rule (class i wins iff p_i >= every later p_j).
-   * Both compile to Columns; the SQL twins share the text.
+   * numpy first-max tie rule ([[firstMax]]). Both compile to
+   * [[ForestEval]] calls (output `c` = class-c mean, [[ForestEval.Argmax]]
+   * = the class); the SQL twins spell the same math as CASE text.
    */
   final case class ForestClassifierModel(trees: Array[Tree], numClasses: Int)
-      extends ColumnProbPredictor with ColumnPredictor {
+      extends ColumnProbPredictor with ColumnPredictor with Forest {
     require(trees.nonEmpty && numClasses >= 2)
 
     override def predictProba(x: Array[Double]): Array[Double] =
-      Array.tabulate(numClasses)(c =>
-        trees.map(treeEval(_, x, c)).reduce(_ + _) / trees.length)
+      Array.tabulate(numClasses)(forestMean(trees, x, _))
+    override def predict(x: Array[Double]): Double = firstMax(predictProba(x)).toDouble
+    override def output(x: Array[Double], out: Int): Double =
+      if (out == ForestEval.Argmax) predict(x) else forestMean(trees, x, out)
+
     override def probColumns(features: Seq[Column]): Seq[Column] =
-      (0 until numClasses).map(c =>
-        trees.toSeq.map(treeCol(_, features, c)).reduce(_ + _) / lit(trees.length.toDouble))
+      (0 until numClasses).map(kernel(features, _))
+    override def column(features: Seq[Column]): Column = kernel(features, ForestEval.Argmax)
+
     def probSql(feats: Seq[String], c: Int): String =
       trees.toSeq.map(treeSql(_, feats, c)).reduce((a, b) => s"($a + $b)") +
         s" / ${trees.length}.0"
-
-    override def predict(x: Array[Double]): Double = {
-      val p = predictProba(x)
-      // first index attaining the max (numpy argmax): the leftmost i
-      // with p_i >= every later p_j
-      (0 until numClasses).find(i => (i + 1 until numClasses).forall(j => p(i) >= p(j)))
-        .getOrElse(numClasses - 1).toDouble
-    }
-    override def column(features: Seq[Column]): Column = {
-      val ps = probColumns(features)
-      def arg(i: Int): Column =
-        if (i == numClasses - 1) lit(i.toDouble)
-        else when((i + 1 until numClasses).map(j => ps(i) >= ps(j)).reduce(_ && _),
-          lit(i.toDouble)).otherwise(arg(i + 1))
-      arg(0)
-    }
     def predictSql(feats: Seq[String]): String = {
       val ps = (0 until numClasses).map(probSql(feats, _))
       def arg(i: Int): String =
@@ -248,7 +273,7 @@ object Predict {
     val (_, cols) = applyConstants(features)
     val classes = if (indexes.nonEmpty) indexes else 0 until model.numClasses
     model match {
-      case m: ColumnProbPredictor => // codegen fast path (forests etc.)
+      case m: ColumnProbPredictor => // codegen fast path (forests, squash)
         val ps = m.probColumns(cols)
         val mask = maskAnyNull(features)
         classes.foldLeft(df) { (d, i) =>
@@ -353,4 +378,65 @@ object Predict {
       stack.layers.zip(outs).map { case (n, c) => c.cast("double").as(n) }
     stack.copy(df = stack.df.select(proj: _*))
   }
+}
+
+/**
+ * One output of a tree ensemble as a single codegen'd expression:
+ * `out` >= 0 is the mean of leaf column `out` (the regressor's value,
+ * a classifier's class-`out` probability), [[ForestEval.Argmax]] the
+ * classifier's first-max class. The body is the scalar twin
+ * (`Forest.output`: [[Predict.treeEval]], [[Predict.forestMean]],
+ * [[Predict.firstMax]]), so engine and `predict` run the same math.
+ * A NULL feature enters as NaN and takes the hi branch, as `NULL <= th`
+ * does in the SQL twin's CASE; the result is never NULL.
+ *
+ * WHY a kernel: frozen trees inlined as nested CASE Columns gave q81 a
+ * 36 KB generated method, past HotSpot's 8,000-byte huge-method limit,
+ * so the JIT never compiled it and every pixel ran interpreted. Here the
+ * model ships as a plan reference object (the [[PipWinner]] pattern) and
+ * the generated code only fills a per-instance feature buffer.
+ */
+case class ForestEval(children: Seq[Expression], forest: Predict.Forest, out: Int)
+    extends Expression {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def prettyName: String = "forest_eval"
+  // the model prints as its size, not as array identity hashes
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(children, s"${forest.trees.length} trees", out)
+
+  def compute(x: Array[Double]): Double = forest.output(x, out)
+
+  override def eval(input: InternalRow): Any = {
+    val x = new Array[Double](children.length)
+    var i = 0
+    while (i < x.length) {
+      val v = children(i).eval(input)
+      x(i) = if (v == null) Double.NaN else v.asInstanceOf[Double]
+      i += 1
+    }
+    compute(x)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("forestEval", this, classOf[ForestEval].getName)
+    val x = ctx.addMutableState("double[]", "forestX",
+      v => s"$v = new double[${children.length}];")
+    val fill = children.zipWithIndex.map { case (c, i) =>
+      val e = c.genCode(ctx)
+      s"${e.code}\n$x[$i] = ${e.isNull} ? Double.NaN : ${e.value};"
+    }.mkString("\n")
+    ev.copy(code = code"""
+      $fill
+      double ${ev.value} = $ref.compute($x);""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
+    copy(children = cs)
+}
+
+object ForestEval {
+  /** `out` code of a classifier's predicted class. */
+  val Argmax: Int = -1
 }

@@ -149,8 +149,8 @@ object StackQueries {
     // reference's actual estimator family (tests/test_prediction.py
     // fits RandomForestRegressor then stack.predict): deterministic
     // CART forest trained driver-side on a seeded fixture sample
-    // (the reference's own extract-then-sklearn-fit workflow), frozen
-    // tree literals compiled to nested-CASE Columns.
+    // (the reference's own extract-then-sklearn-fit workflow), scored
+    // by one ForestEval kernel call that ships the frozen trees.
     "q80_predict_forest" -> ((s, _) => {
       Predict.predict(stack(s).df, ForestFeats, RegForest)
         .select("row", "col", "pred_raw_0")
@@ -159,7 +159,9 @@ object StackQueries {
     // predict_proba + predict with a random-forest CLASSIFIER
     // (tests/test_prediction.py RandomForestClassifier): per-class
     // probability = mean of leaf distributions, predicted class =
-    // numpy-argmax — all frozen-literal CASE trees, codegen fast path.
+    // numpy-argmax — one ForestEval kernel call per output (the scalar
+    // twin over the plan-shipped forest), codegen fast path; the oracle
+    // spells the same trees as CASE text.
     "q81_forest_proba" -> ((s, _) => {
       val probs = Predict.predictProba(stack(s).df, ForestFeats, ClsForest)
       Predict.predict(probs, ForestFeats, ClsForest)
@@ -636,9 +638,11 @@ object StackQueries {
   /** D8 CTE chain (no `WITH ` prefix — q121 needs `WITH RECURSIVE`):
     * the same two-pass 8-neighbor gather as the engine (W/E carried
     * along the row pass, six vertical lags/leads), per-code
-    * distance-weighted drops as NAMED columns (the argmax fold nests
-    * its accumulators twice per step — names keep the text linear),
-    * ending in `dd(row, col, b1, d8_dir, d8_drop)`. */
+    * distance-weighted drops as NAMED columns, so the argmax fold's
+    * text repeats drop names rather than drop arithmetic (its
+    * accumulators are still copied at each step, so the text doubles
+    * per code; the engine binds each step to a column instead), ending
+    * in `dd(row, col, b1, d8_dir, d8_drop)`. */
   private def d8OracleCtes: String = {
     import graft.operators.Focal
     val b1 = bandSql("row", "col", NcBands.head)

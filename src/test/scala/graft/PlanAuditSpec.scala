@@ -194,6 +194,25 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     assert(!plan.contains("Exchange"), "canonicalUrl must not shuffle:\n" + plan.take(600))
   }
 
+  test("no generated method past HotSpot's huge-method limit (D8 argmax, forest kernels)") {
+    // the JIT never compiles a method of 8,000+ bytecode bytes, so every
+    // row through it runs interpreted: the inline D8 fold (q118/q121/
+    // q128) and nested-CASE forests (q80/q81) generated 9.9-36.7 KB ones
+    import graft.tools.CodegenSweep.{HugeMethodLimit, codegenStages, maxMethodBytes}
+    val huge = Seq("q80_predict_forest", "q81_forest_proba", "q118_d8_flowdir",
+        "q121_watershed", "q128_flow_accum").flatMap { q =>
+      val df = graft.SparkEntry.queries(q)(spark, sf(q))
+      df.collect()
+      val stages = codegenStages(df.queryExecution.executedPlan)
+      assert(stages.nonEmpty, q)
+      val sized = stages.map(st => (maxMethodBytes(st), st))
+      graft.plans.Caches.flush()
+      sized.collect { case (bytes, st) if bytes >= HugeMethodLimit =>
+        s"$q: a generated method is $bytes bytes in\n${st.treeString.take(600)}" }
+    }
+    assert(huge.isEmpty, huge.mkString("\n"))
+  }
+
   test("contour: two window shuffles + explode, no join, no cartesian") {
     import spark.implicits._
     val px = (for { r <- 0 until 8; c <- 0 until 8 }
